@@ -11,7 +11,8 @@ Reproduces the reference's generated ClickHouse query
 
 as a Catalyst plan: filter (partition-pruned, parquet-pushed) →
 hash-aggregate (partial+final, map-side combine for count; quantile via
-``percentile``/``percentile_approx``) → sort by bucket.
+``percentile``/``percentile_approx``). :func:`read_query` adds the
+final sort by bucket (the reference's ``ORDER BY t``).
 
 Step computation (clickhouse/query.go:13-15,48-58): ``step =
 max((end-start)/8192, 10)`` seconds. The reference inverts the
@@ -23,6 +24,13 @@ one row per series with a t-sorted samples array.
 
 Multi-query union (M1, clickhouse/client.go:167-210): results of all
 queries in a request are merged into a single result set.
+:func:`read_request` plans no sort: the series assembly after it
+regroups the rows and orders each series' samples itself, so a range
+sort there would cost an exchange, its sampling job and a sort only to
+be thrown away. A one-query request is that query's bucket aggregate
+alone; two or more are unioned and merged by one first-query-wins
+aggregate. Read then assembled, a one-query request plans two hash
+exchanges: the bucket aggregate's and the assembly's.
 """
 
 from __future__ import annotations
@@ -56,17 +64,12 @@ def bucket_ms(ts, step_s: int):
     return ((epoch_s - (epoch_s % F.lit(step_s))) * 1000).cast("long")
 
 
-def read_query(df: DataFrame, q: "M.PromQuery", *,
-               quantile: float = QUANTILE,
-               exact_quantile: bool = False,
-               parity_mode: bool = False) -> DataFrame:
-    """Compile one PromQuery against the canonical metrics frame.
-
-    Returns the flat shape ``(cnt, t, name, tags, value)``
-    (clickhouse/query.go:17). ``exact_quantile`` switches
-    ``percentile_approx`` (scale path, mergeable sketch ≙ ClickHouse's
-    approximate ``quantile()``) to exact ``percentile`` (oracle path).
-    """
+def _read_buckets(df: DataFrame, q: "M.PromQuery", *,
+                  quantile: float = QUANTILE,
+                  exact_quantile: bool = False,
+                  parity_mode: bool = False) -> DataFrame:
+    """The bucket aggregate of one PromQuery, unsorted: matchers →
+    ``groupBy(t, name, tags)`` → ``count`` + quantile."""
     step = q.step_s or compute_step_s(q.start_ms, q.end_ms,
                                       parity_mode=parity_mode)
     filtered = M.apply(df, q, parity_mode=parity_mode)
@@ -83,14 +86,24 @@ def read_query(df: DataFrame, q: "M.PromQuery", *,
             qfn(F.col("val"), F.lit(quantile)).alias("value"),
         )
         .select("cnt", "t", "name", "tags", "value")
-        .orderBy("t")
     )
+
+
+def read_query(df: DataFrame, q: "M.PromQuery", **kw) -> DataFrame:
+    """Compile one PromQuery against the canonical metrics frame.
+
+    Returns the flat shape ``(cnt, t, name, tags, value)`` ordered by
+    ``t`` (clickhouse/query.go:17). ``exact_quantile`` switches
+    ``percentile_approx`` (scale path, mergeable sketch ≙ ClickHouse's
+    approximate ``quantile()``) to exact ``percentile`` (oracle path).
+    """
+    return _read_buckets(df, q, **kw).orderBy("t")
 
 
 def read_request(df: DataFrame, queries: Sequence["M.PromQuery"],
                  **kw) -> DataFrame:
     """M1: union all per-query results into one result set
-    (clickhouse/client.go:212-223 collapses into Results[0]).
+    (clickhouse/client.go:212-223 collapses into Results[0]), unsorted.
 
     The reference appends duplicate samples when query ranges overlap
     (clickhouse/client.go:205-208, no dedup); we instead keep exactly
@@ -99,10 +112,13 @@ def read_request(df: DataFrame, queries: Sequence["M.PromQuery"],
     different ranges and so disagree on cnt/value (a bare
     ``dropDuplicates`` would keep an arbitrary one). Same mechanism as
     :func:`merge_sorted_dedup`: scalar ``min_by`` on the query index —
-    hash aggregate, no window/sort.
+    hash aggregate, no window/sort. A single query has nothing to
+    merge, so its bucket aggregate is returned as it is.
     """
+    if len(queries) == 1:
+        return _read_buckets(df, queries[0], **kw)
     parts = [
-        read_query(df, q, **kw).withColumn("_prio", F.lit(i))
+        _read_buckets(df, q, **kw).withColumn("_prio", F.lit(i))
         for i, q in enumerate(queries)
     ]
     union = reduce(DataFrame.unionByName, parts)

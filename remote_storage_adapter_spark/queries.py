@@ -215,7 +215,8 @@ O_read_multi_query_union = _O_union()
 
 def q_read_series_assembly(spark, sf_dir):
     q = PromQuery(T5, T20, (LabelMatcher("EQ", "__name__", "purchase"),))
-    flat = read_query(_metrics(spark, sf_dir), q, exact_quantile=True)
+    # the request path, unsorted: the assembly orders each series itself
+    flat = read_request(_metrics(spark, sf_dir), [q], exact_quantile=True)
     assembled = assemble_series(flat)  # name, tags, samples[]
     return assembled.select(
         "name",
@@ -258,7 +259,7 @@ def q_read_series_assembly_salted(spark, sf_dir):
     )
 
     q = PromQuery(T5, T20, (LabelMatcher("EQ", "__name__", "purchase"),))
-    flat = read_query(_metrics(spark, sf_dir), q, exact_quantile=True)
+    flat = read_request(_metrics(spark, sf_dir), [q], exact_quantile=True)
     assembled = assemble_series_salted(flat, n_salts=16)
     return assembled.select(
         "name",

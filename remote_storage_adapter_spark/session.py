@@ -9,6 +9,8 @@ DuckDB oracle, which treats naive timestamps as UTC).
 from __future__ import annotations
 
 import os
+import re
+from typing import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -62,6 +64,47 @@ _RUNTIME_CONF = {
 }
 
 
+_UDS_ENABLED = "spark.python.unix.domain.socket.enabled"
+_UDS_DIR = "spark.python.unix.domain.socket.dir"
+#: A Unix domain socket path holds at most 107 bytes (``sun_path`` is
+#: 108, NUL included); PySpark and the JVM name each socket
+#: ``<dir>/.<uuid4>.sock``, 42 of them.
+_UDS_PATH_MAX = 107
+_UDS_NAME_LEN = len(".00000000-0000-0000-0000-000000000000.sock")
+
+
+def _jvm_tmpdir(conf: Mapping[str, str], env: Mapping[str, str]) -> str:
+    """The ``java.io.tmpdir`` the driver JVM will start with: the last
+    ``-Djava.io.tmpdir=`` among the options it reads, in the order it
+    reads them (``_JAVA_OPTIONS`` last), else the JVM default ``/tmp``.
+    """
+    opts = " ".join((env.get("JAVA_TOOL_OPTIONS", ""),
+                     env.get("SPARK_SUBMIT_OPTS", ""),
+                     conf.get("spark.driver.extraJavaOptions", ""),
+                     env.get("_JAVA_OPTIONS", "")))
+    found = re.findall(r"-Djava\.io\.tmpdir=(\S+)", opts)
+    return found[-1] if found else "/tmp"
+
+
+def _uds_fits(socket_dir: str) -> bool:
+    return len(os.fsencode(socket_dir)) + 1 + _UDS_NAME_LEN <= _UDS_PATH_MAX
+
+
+def _uds_conf(conf: Mapping[str, str], tmpdir: str,
+              short_dir: str = "/tmp") -> dict:
+    """Confs that keep the Python worker sockets' paths within
+    ``_UDS_PATH_MAX``. Without a socket directory the sockets go under
+    ``java.io.tmpdir`` (``tmpdir``); when those paths would not fit,
+    name ``short_dir`` instead, or fall back to TCP when it cannot
+    serve. A socket directory the caller set, or TCP, is left alone."""
+    if str(conf.get(_UDS_ENABLED, "false")).lower() != "true" \
+            or _UDS_DIR in conf or _uds_fits(tmpdir):
+        return {}
+    if _uds_fits(short_dir) and os.access(short_dir, os.W_OK | os.X_OK):
+        return {_UDS_DIR: short_dir}
+    return {_UDS_ENABLED: "false"}
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an existing session."""
     for k, v in _RUNTIME_CONF.items():
@@ -83,8 +126,18 @@ def get_spark(app_name: str = "remote-storage-adapter-spark",
     override STARTUP confs (e.g. ``spark.io.compression.codec``, which
     the shuffle block writers read from the frozen SparkConf) while
     keeping every other knob identical to the production session —
-    the A/B then isolates exactly the overridden conf.
+    the A/B then isolates exactly the overridden conf. A key of
+    ``_RUNTIME_CONF`` raises ``ValueError``: the query results and the
+    oracle contract depend on those (the session time zone, how
+    parquet timestamps read).
     """
+    extra_conf = dict(extra_conf or {})
+    clash = sorted(extra_conf.keys() & _RUNTIME_CONF.keys())
+    if clash:
+        raise ValueError(
+            f"extra_conf may not override the engine's runtime confs: "
+            f"{clash}")
+    uds = os.environ.get("SPARK_GRAFT_UDS", "1") != "0"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -108,8 +161,10 @@ def get_spark(app_name: str = "remote-storage-adapter-spark",
         # cheaper. ``SPARK_GRAFT_UDS=0`` restores TCP (the conf
         # only applies to local/classic mode, which is where we
         # run; a real cluster's executors set their own transport).
-        .config("spark.python.unix.domain.socket.enabled",
-                os.environ.get("SPARK_GRAFT_UDS", "1") != "0")
+        # The sockets are named <java.io.tmpdir>/.<uuid>.sock unless a
+        # socket directory is set, and a deep tmpdir overflows a socket
+        # path: _uds_conf then names a short directory, or picks TCP.
+        .config(_UDS_ENABLED, uds)
         # r14: ContextCleaner reclaims shuffle/broadcast state only
         # when the DRIVER GCs, and a large heap (the sf100 recipe
         # runs 48 GiB) full-GCs rarely — an r14 session that ran 6
@@ -124,8 +179,8 @@ def get_spark(app_name: str = "remote-storage-adapter-spark",
         .config("spark.cleaner.periodicGC.interval",
                 os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"))
     )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    conf = {_UDS_ENABLED: str(uds).lower(), **extra_conf}
+    uds_conf = _uds_conf(conf, _jvm_tmpdir(conf, os.environ))
+    for k, v in {**_RUNTIME_CONF, **extra_conf, **uds_conf}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

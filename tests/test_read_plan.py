@@ -3,7 +3,10 @@ series assembly (A5), merge-dedup (M2), result cap (O3)."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -255,3 +258,86 @@ def test_approx_quantile_close_to_exact(spark):
     for r in row:
         spread = r["mx"] - r["mn"]
         assert abs(r["approx"] - r["exact"]) <= 0.05 * spread + 1e-9
+
+
+# ---------------------------------------------------------------------
+# read_request plans no range sort: equality with the sorted form it
+# replaced, and the plan shape that makes it cheaper.
+
+def _sorted_union_merge(df, queries, **kw):
+    """The earlier read_request: every query through the sorted
+    read_query, then the first-query-wins min_by merge, also for one
+    query."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    parts = [read_query(df, q, **kw).withColumn("_prio", F.lit(i))
+             for i, q in enumerate(queries)]
+    return (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy("t", "name", "tags")
+        .agg(F.min_by("cnt", "_prio").alias("cnt"),
+             F.min_by("value", "_prio").alias("value"))
+        .select("cnt", "t", "name", "tags", "value")
+    )
+
+
+def _rows(df):
+    return sorted((r["t"], r["name"], tuple(r["tags"]), r["cnt"], r["value"])
+                  for r in df.collect())
+
+
+def _mixed_metrics(spark):
+    # three series of two names, 4 s apart over 400 s, repeated values
+    rows = [(n, {"__name__": n, "pod": p}, float((i * 7 + len(p)) % 13),
+             4_000 * i)
+            for i in range(100)
+            for n, p in (("up", "a"), ("up", "b"), ("rq", "a"))]
+    return _metrics(spark, rows)
+
+
+_REQUESTS = {
+    "single": [PromQuery(0, 400_000, step_s=30)],
+    "single_default_step": [PromQuery(50_000, 250_000)],
+    # overlapping ranges with different steps clip shared buckets
+    "overlap_steps": [PromQuery(0, 200_000, step_s=20),
+                      PromQuery(100_000, 400_000, step_s=60),
+                      PromQuery(150_000, 170_000, step_s=20)],
+    "overlap_same_step": [PromQuery(60_000, 180_000, step_s=30),
+                          PromQuery(0, 400_000, step_s=30)],
+}
+
+
+@pytest.mark.parametrize("exact", [True, False])
+@pytest.mark.parametrize("name", sorted(_REQUESTS))
+def test_read_request_equals_sorted_union_merge(spark, name, exact):
+    from remote_storage_adapter_spark.plans.read import read_request
+
+    m = _mixed_metrics(spark)
+    qs = _REQUESTS[name]
+    got = _rows(read_request(m, qs, exact_quantile=exact))
+    assert got and got == _rows(
+        _sorted_union_merge(m, qs, exact_quantile=exact))
+
+
+def _final_plan(df) -> str:
+    """The executed plan of ``df``'s last action: AQE's final plan."""
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def test_read_request_plan_has_no_range_sort(spark):
+    from remote_storage_adapter_spark.plans.read import read_request
+
+    m = _mixed_metrics(spark)
+    one = assemble_series(read_request(m, _REQUESTS["single"]))
+    assert len(one.collect()) == 3
+    plan = _final_plan(one)
+    assert "rangepartitioning" not in plan
+    assert not re.search(r"\bSort\b", plan)
+    # the bucket aggregate's exchange and the assembly's
+    assert plan.count("Exchange hashpartitioning") == 2
+
+    many = assemble_series(read_request(m, _REQUESTS["overlap_steps"]))
+    many.collect()
+    assert "rangepartitioning" not in _final_plan(many)
