@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from remote_storage_adapter_spark.streaming.source import file_stream
+
 
 def apply_curate_batch(batch_df: DataFrame, batch_id: int, *,
                        out_dir: str, seen_state: str,
@@ -597,11 +599,8 @@ def stream_curate_maintain(
     AFTER new files landed regroups batches under already-committed
     ids and silently skips them — resume the original checkpoint
     (normal operation) or start a fresh state/index path."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: apply_curate_batch(

@@ -34,6 +34,7 @@ from remote_storage_adapter_spark.operators.dedup import (
     minhash_index,
     minhash_index_append,
 )
+from remote_storage_adapter_spark.streaming.source import file_stream
 
 
 def apply_index_batch(batch_df: DataFrame, batch_id: int,
@@ -300,11 +301,8 @@ def stream_minhash_index_maintain(
     docs are indexed — streaming text dedup-on-ingest (see
     apply_index_batch). Query the maintained index any time with
     minhash_lsh_join_indexed."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: apply_index_batch(
@@ -414,11 +412,8 @@ def stream_semantic_index_maintain(
     is appended — streaming SemDeDup-on-ingest. Query the maintained
     index any time with similarity.ivf_topk_indexed or feed it to
     operators.dedup.semantic_dedup_append."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: apply_semantic_batch(
@@ -574,11 +569,8 @@ def stream_line_dedup_maintain(
     AFTER new files landed regroups batches under already-committed
     ids and silently skips them — resume the original checkpoint
     (normal operation) or start a fresh state/index path."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: apply_line_batch(
@@ -629,11 +621,8 @@ def stream_simhash_index_maintain(
         simhash_append_exactly_once,
     )
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: simhash_append_exactly_once(

@@ -18,6 +18,15 @@ batch republishes idempotently — no duplicate and no partial rows,
 crash-tested at every protocol step in tests/test_ingest.py. Delta
 remains the opt-in upgrade for all-or-nothing reader snapshots.
 
+Per-trigger cost: a micro-batch of small requests is cheap, so the
+Spark jobs a trigger runs set most of a drain's time. The landing
+directory is read through ``streaming.source.file_stream``, whose
+source lives in a session of its own that lists a trigger's files on
+the driver (a trigger of more than 32 files would otherwise launch a
+listing job for files already listed). A batch is cached only when it
+fans out to two or more sinks; with one sink the write is its only
+action and a cache would cost one more job a trigger.
+
 Late/out-of-order samples are accepted unconditionally (T2): raw
 ingest is append-only with event-time columns; ordering is imposed at
 read/rollup time, so no watermark is needed (the reference behaves
@@ -37,6 +46,7 @@ from remote_storage_adapter_spark.operators.ingest import (
     write_metrics_exactly_once,
 )
 from remote_storage_adapter_spark.schema import WRITE_REQUEST_SCHEMA
+from remote_storage_adapter_spark.streaming.source import file_stream
 
 
 def land_write_request(landing_dir: str, timeseries: list, seq: int) -> str:
@@ -103,18 +113,26 @@ def stream_ingest(
     batch-ledger sink instead of plain append — a replayed batch
     (crash before checkpoint commit) is re-published idempotently,
     per sink path. Costs one extra rename per output file.
+
+    The file source is created in a clone of ``spark`` that carries
+    the caller's runtime conf and a parallel-listing threshold of at
+    least ``max_files_per_trigger``, so no trigger runs a listing job
+    (see ``streaming.source.file_stream``). The query itself belongs
+    to ``spark``, whose conf is left unchanged. With two or more
+    ``table_paths`` the batch is persisted, so every sink writes the
+    same rows, one ``updated`` stamp included; with one path it is
+    not, since the write is the batch's only action.
     """
-    raw = (
-        spark.readStream.schema(WRITE_REQUEST_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(landing_dir)
-    )
+    raw = file_stream(spark, WRITE_REQUEST_SCHEMA, landing_dir, fmt="json",
+                      max_files_per_trigger=max_files_per_trigger)
+    fan_out = len(table_paths) > 1
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         metrics = ingest_batch(batch_df)
         if transform is not None:
             metrics = transform(metrics)
-        metrics.persist()
+        if fan_out:
+            metrics.persist()
         try:
             for path in table_paths:  # K2 fan-out
                 if exactly_once:
@@ -122,7 +140,8 @@ def stream_ingest(
                 else:
                     write_metrics(metrics, path)
         finally:
-            metrics.unpersist()
+            if fan_out:
+                metrics.unpersist()
 
     writer = (
         raw.writeStream.foreachBatch(sink)

@@ -44,6 +44,7 @@ from remote_storage_adapter_spark.streaming.sketch import (
     _merge_into,
     _merge_into_once,
 )
+from remote_storage_adapter_spark.streaming.source import file_stream
 
 
 def merge_lm_state(batch_df, state_path: str, *,
@@ -96,11 +97,8 @@ def stream_lm_maintain(
     AFTER new files landed regroups batches under already-committed
     ids and silently skips them — resume the original checkpoint
     (normal operation) or start a fresh state/index path."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: merge_lm_state(
@@ -244,11 +242,8 @@ def stream_lm_table_maintain(
     compact periodically with :func:`lm_table_compact`. The same
     deterministic re-batching caveat as every batch-id-keyed ledger
     here applies."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: apply_lm_table_batch(

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from remote_storage_adapter_spark.streaming.source import file_stream
+
 
 def apply_text_index_batch(batch_df: DataFrame, batch_id: int,
                            path: str, *, buckets: int = 64,
@@ -114,11 +116,8 @@ def stream_text_index_maintain(
     AFTER new files landed regroups batches under already-committed
     ids and silently skips them — resume the original checkpoint
     (normal operation) or start a fresh state/index path."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
+    raw = file_stream(spark, schema, landing_dir, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: apply_text_index_batch(

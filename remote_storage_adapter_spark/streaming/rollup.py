@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from remote_storage_adapter_spark.functions.codecs import labels_from_tags
 from remote_storage_adapter_spark.schema import METRICS_SCHEMA
+from remote_storage_adapter_spark.streaming.source import file_stream
 
 
 def stream_rollup(
@@ -57,11 +58,8 @@ def stream_rollup(
     max_files_per_trigger: int = 64,
 ):
     """Start the incremental rollup stream; returns the StreamingQuery."""
-    raw = (
-        spark.readStream.schema(METRICS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_path)
-    )
+    raw = file_stream(spark, METRICS_SCHEMA, raw_path, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     agg_fn = getattr(F, agg)
     window = F.window(F.col("ts"), f"{precision_s} seconds")
     # stage 1 — streaming LWW: one state row per exact sample key; the

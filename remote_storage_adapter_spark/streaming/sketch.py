@@ -39,6 +39,7 @@ from remote_storage_adapter_spark.operators.sketch import (
     cms_sketch,
     hll_registers,
 )
+from remote_storage_adapter_spark.streaming.source import file_stream
 
 
 def _merge_into(state_path: str, new, merge) -> None:
@@ -246,11 +247,8 @@ def stream_sketch_maintain(
     bad = set(sketch_kwargs) - set(allowed)
     if bad:
         raise TypeError(f"{kind} sketch takes {allowed}, got {sorted(bad)}")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(raw_path)
-    )
+    raw = file_stream(spark, schema, raw_path, fmt="parquet",
+                      max_files_per_trigger=max_files_per_trigger)
     writer = (
         raw.writeStream
         .foreachBatch(lambda df, bid: merge_fn(

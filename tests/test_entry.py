@@ -3,9 +3,10 @@ oracle-parity spot check (full gate: tools/parity.py)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from tools.parity import compare, duck_con  # noqa: E402

@@ -12,11 +12,12 @@ and inflated pair counts ~1000×.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.gen_sf import (  # noqa: E402
     scale_documents,

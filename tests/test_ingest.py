@@ -137,6 +137,13 @@ def test_streaming_fanout_two_sinks(spark, tmp_path):
     rows_a = sorted(r["val"] for r in spark.read.parquet(out_a).collect())
     rows_b = sorted(r["val"] for r in spark.read.parquet(out_b).collect())
     assert rows_a == rows_b == [1.23, 5.1234]
+    # the batch is cached for the fan-out, so both sinks hold the same
+    # rows, down to the ``updated`` stamp; writes from an uncached batch
+    # would each evaluate their own current_timestamp()
+    cols = ["date", "name", "tags", "ts", "val", "updated"]
+    full_a, full_b = (spark.read.parquet(p).select(cols).sort(cols).collect()
+                      for p in (out_a, out_b))
+    assert full_a == full_b
 
 
 def test_streaming_ingest_end_to_end(spark, tmp_path):

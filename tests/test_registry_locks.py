@@ -19,13 +19,14 @@ next #3). These tests make that web refactor-proof:
 
 from __future__ import annotations
 
+import os
 import pathlib
 import re
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from remote_storage_adapter_spark import queries as Q  # noqa: E402

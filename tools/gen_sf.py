@@ -34,7 +34,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -118,7 +119,8 @@ def scale_generic(df, factor: int, key: str):
 
 def main():
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/scratch/sf1"
+    out_dir = (sys.argv[2] if len(sys.argv) > 2
+               else os.path.join(REPO, "scratch", "sf1"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("gen-sf")
     spark.sparkContext.setLogLevel("ERROR")

@@ -11,12 +11,13 @@ tolerance). Usage::
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from remote_storage_adapter_spark.session import get_spark  # noqa: E402
 from remote_storage_adapter_spark.sources.tables import TABLES  # noqa: E402
