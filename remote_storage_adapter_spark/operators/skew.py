@@ -211,6 +211,13 @@ def assemble_series_salted(flat: DataFrame, n_salts: int = 32) -> DataFrame:
     *work* (sorting chunk arrays is O(total log total) in one task —
     acceptable because the output row itself must hold the whole
     series; callers needing bounded rows use the step cap, O3).
+
+    On ``plans.read.read_request`` output neither phase plans an
+    exchange of its own: that output is already hash-partitioned on the
+    series key, which clusters both groupings, so each series' chunks
+    are collected and merged in the task that holds the series. There
+    the salting spreads no work; it pays only on a flat frame not
+    partitioned by series.
     """
     chunked = (
         salted(flat.select("name", "tags", "t", "value"), n_salts)

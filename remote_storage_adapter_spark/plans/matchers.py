@@ -119,17 +119,21 @@ def compile_matchers(matchers: Sequence[LabelMatcher], labels: Column,
     return pred
 
 
-def compile_time_range(q: PromQuery, ts: Column,
-                       date: Optional[Column] = None) -> Column:
-    """F2: ts range + explicit partition-pruning conjuncts on `date`."""
-    start = F.timestamp_millis(F.lit(q.start_ms))
-    end = F.timestamp_millis(F.lit(q.end_ms))
-    pred = (ts >= start) & (ts <= end)
+def compile_time_range(q: PromQuery, ts: str = "ts",
+                       date: Optional[str] = None) -> Column:
+    """F2: ts range + explicit partition-pruning conjuncts on `date`,
+    over the named columns.
+
+    One SQL expression, not a tree of Column calls: its only values are
+    the two integer bounds, and each PySpark Column call costs several
+    py4j round trips."""
+    start = f"timestamp_millis({int(q.start_ms)})"
+    end = f"timestamp_millis({int(q.end_ms)})"
+    pred = f"`{ts}` >= {start} AND `{ts}` <= {end}"
     if date is not None:
-        pred = (
-            (date >= F.to_date(start)) & (date <= F.to_date(end)) & pred
-        )
-    return pred
+        pred = (f"`{date}` >= to_date({start}) AND "
+                f"`{date}` <= to_date({end}) AND {pred}")
+    return F.expr(pred)
 
 
 def apply(df: DataFrame, q: PromQuery, parity_mode: bool = False) -> DataFrame:
@@ -145,9 +149,9 @@ def apply(df: DataFrame, q: PromQuery, parity_mode: bool = False) -> DataFrame:
         )
 
         df = df.withColumn("labels", labels_from_tags(F.col("tags")))
-    date = F.col("date") if "date" in df.columns else None
+    date = "date" if "date" in df.columns else None
     return df.filter(
-        compile_time_range(q, F.col("ts"), date)
+        compile_time_range(q, "ts", date)
         & compile_matchers(q.matchers, F.col("labels"), F.col("name"),
                            parity_mode=parity_mode)
     )

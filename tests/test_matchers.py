@@ -117,3 +117,26 @@ def test_apply_tags_only_frame(spark, frame):
     ))
     got = sorted(r["val"] for r in apply_query(tagged, q).collect())
     assert got == [1.0, 3.0]
+
+
+def test_time_range_prunes_date_partitions(spark, tmp_path):
+    """The time range reaches the scan as partition filters on both date
+    bounds, and keeps its inclusive ts bounds."""
+    import re
+
+    day = 86_400_000
+    rows = [("up", {"__name__": "up"}, float(i), i * day // 2)
+            for i in range(8)]  # two samples a day over four days
+    df = spark.createDataFrame(
+        rows, "name string, labels map<string,string>, val double, "
+              "ts_ms long")
+    path = str(tmp_path / "m")
+    (df.withColumn("ts", F.timestamp_millis("ts_ms"))
+     .withColumn("date", F.to_date("ts"))
+     .write.partitionBy("date").parquet(path))
+    q = PromQuery(day, 2 * day)  # both ends fall on a sample
+    got = apply_query(spark.read.parquet(path), q)
+    assert sorted(r["val"] for r in got.collect()) == [2.0, 3.0, 4.0]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    pushed = re.search(r"PartitionFilters: \[(.*?)\]", plan).group(1)
+    assert ">=" in pushed and "<=" in pushed

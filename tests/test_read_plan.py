@@ -326,7 +326,17 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().executedPlan().toString()
 
 
+def _exchanges(plan: str) -> int:
+    return plan.count("Exchange hashpartitioning")
+
+
 def test_read_request_plan_has_no_range_sort(spark):
+    """Matched rows are hash-partitioned on the series key once, and the
+    bucket aggregate, the multi-query merge and the assembly all run on
+    that partitioning."""
+    from remote_storage_adapter_spark.operators.skew import (
+        assemble_series_salted,
+    )
     from remote_storage_adapter_spark.plans.read import read_request
 
     m = _mixed_metrics(spark)
@@ -335,9 +345,160 @@ def test_read_request_plan_has_no_range_sort(spark):
     plan = _final_plan(one)
     assert "rangepartitioning" not in plan
     assert not re.search(r"\bSort\b", plan)
-    # the bucket aggregate's exchange and the assembly's
-    assert plan.count("Exchange hashpartitioning") == 2
+    assert _exchanges(plan) == 1
+    # a fixed width: AQE would coalesce a small read to one reduce task
+    assert "coalesced" not in plan
 
-    many = assemble_series(read_request(m, _REQUESTS["overlap_steps"]))
+    # one exchange per query, none above the union
+    qs = _REQUESTS["overlap_steps"]
+    many = assemble_series(read_request(m, qs))
     many.collect()
-    assert "rangepartitioning" not in _final_plan(many)
+    plan = _final_plan(many)
+    assert "rangepartitioning" not in plan
+    assert _exchanges(plan) == len(qs)
+    assert _exchanges(plan[:plan.index("Union")]) == 0
+
+    # the salted assembly adds none either: the series key already
+    # clusters its rows
+    salted = assemble_series_salted(
+        read_request(m, _REQUESTS["single"]), n_salts=4)
+    assert len(salted.collect()) == 3
+    assert _exchanges(_final_plan(salted)) == 1
+
+
+def test_read_runs_two_jobs_after_open(spark, tmp_path):
+    """A one-query read, from the opened frame to the response dict: the
+    exchange's map stage and the Arrow collect."""
+    from remote_storage_adapter_spark.plans.read import (
+        read_request,
+        to_read_response,
+    )
+
+    path = str(tmp_path / "metrics")
+    _mixed_metrics(spark).write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = "test-read-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        resp = to_read_response(
+            assemble_series(read_request(df, _REQUESTS["single"])))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(resp["results"][0]["timeseries"]) == 3
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+# ---------------------------------------------------------------------
+# to_read_response reads an Arrow table by column: equality with the
+# Row-by-Row form it replaced.
+
+def _row_read_response(assembled):
+    """The earlier to_read_response: one Row per series and per
+    sample."""
+    series = []
+    for row in assembled.collect():
+        labels = [
+            {"name": t.split("=", 1)[0], "value": t.split("=", 1)[1]}
+            for t in row["tags"]
+            if "=" in t and t.split("=", 1)[1] != ""
+        ]
+        series.append(
+            {
+                "labels": labels,
+                "samples": [
+                    {"timestamp": s["t"], "value": s["value"]}
+                    for s in row["samples"]
+                ],
+            }
+        )
+    series.sort(key=lambda s: tuple(
+        (l["name"], l["value"]) for l in s["labels"]
+    ))
+    return {"results": [{"timeseries": series}]}
+
+
+_FLAT = "name string, tags array<string>, t long, value double"
+
+
+def _assert_same_response(assembled):
+    from remote_storage_adapter_spark.plans.read import to_read_response
+
+    got = to_read_response(assembled)
+    # repr: byte-equal, so an int timestamp turned float would show. A
+    # bool is asserted, not the strings, so that a failure does not
+    # diff a megabyte-long repr.
+    same = repr(got) == repr(_row_read_response(assembled))
+    assert same, "the Arrow and the Row response differ"
+    return got
+
+
+def test_arrow_response_empty(spark):
+    got = _assert_same_response(
+        assemble_series(spark.createDataFrame([], _FLAT)))
+    assert got == {"results": [{"timeseries": []}]}
+
+
+def test_arrow_response_label_edges(spark):
+    """The golden tests' '='-in-value and empty-valued tags."""
+    flat = spark.createDataFrame(
+        [("up", ["__name__=up", "env=stage=blue", "odd==x", "drop="],
+          2000, 2.5),
+         ("up", ["__name__=up", "env=stage=blue", "odd==x", "drop="],
+          1000, 1.5),
+         ("up", ["__name__=up", "job=db", "x="], 1000, 9.0),
+         ("rq", ["__name__=rq"], 1000, 9.0)],
+        _FLAT,
+    )
+    got = _assert_same_response(assemble_series(flat))
+    assert len(got["results"][0]["timeseries"]) == 3
+
+
+def test_arrow_response_null_value_stays_none(spark):
+    flat = spark.createDataFrame(
+        [("up", ["__name__=up"], 1000, None),
+         ("up", ["__name__=up"], 2000, 2.5)],
+        _FLAT,
+    )
+    got = _assert_same_response(assemble_series(flat))
+    samples = got["results"][0]["timeseries"][0]["samples"]
+    assert samples[0] == {"timestamp": 1000, "value": None}
+
+
+def test_arrow_response_full_series(spark):
+    """A series at the step cap next to a short one: the flattened
+    columns are cut at the right lengths."""
+    flat = (
+        spark.range(MAX_SAMPLES)
+        .select(F.lit("up").alias("name"),
+                F.array(F.lit("__name__=up")).alias("tags"),
+                (F.col("id") * 10_000).alias("t"),
+                (F.col("id") / 7).alias("value"))
+        .unionByName(spark.createDataFrame(
+            [("rq", ["__name__=rq"], t, float(t)) for t in (1, 2, 3)],
+            _FLAT))
+    )
+    got = _assert_same_response(assemble_series(flat))
+    lens = [len(s["samples"]) for s in got["results"][0]["timeseries"]]
+    assert lens == [3, MAX_SAMPLES]
+
+
+def test_arrow_response_many_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    flat = spark.createDataFrame(
+        [("up", ["__name__=up", f"pod={p}"], 1000 * i, float(p * i))
+         for p in range(5) for i in range(p + 1)],
+        _FLAT,
+    )
+    assembled = assemble_series(flat).coalesce(1)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        # the case is only a case if the collect arrives in pieces
+        assert assembled.toArrow().column("samples").num_chunks > 1
+        got = _assert_same_response(assembled)
+    finally:
+        spark.conf.set(key, old)
+    assert len(got["results"][0]["timeseries"]) == 5
