@@ -2,7 +2,11 @@
 
 Runs the flagship queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+JSON line: {"metric", "value", "unit", "queries", "env", "sf"}, the
+per-row median walls. The full record goes to BENCH_LOCAL.json: every
+rep's wall, and each row's engine work per timed rep (``layers``: jobs,
+stages, tasks, task CPU, bytes and rows read, shuffle and spill bytes,
+files and partitions scanned), folded from the session's event log.
 
 The query set mirrors BASELINE.md's measurable surface: read-path
 matcher+range+downsample latency, rollup tier runtime, ingest-transform
@@ -13,12 +17,16 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import random
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.eventlog import COUNTERS, group_counters  # noqa: E402
 from remote_storage_adapter_spark.session import get_spark  # noqa: E402
 from remote_storage_adapter_spark import queries as Q  # noqa: E402
 from remote_storage_adapter_spark.operators.ingest import to_metrics  # noqa: E402
@@ -62,8 +70,6 @@ def bench_write_metrics(spark, sf_dir):
     Measures the path the r6 fan-out fix changed: one exchange on
     (date, hash(name) % k), per-task (date, name, ts) sort, dynamic
     partition write."""
-    import tempfile
-
     from remote_storage_adapter_spark.operators.ingest import (
         write_metrics,
     )
@@ -116,7 +122,7 @@ def bench_dedup_clusters(spark, sf_dir):
 def bench_dedup_simhash_indexed(spark, sf_dir):
     """Incoming 10% batch Hamming-joined against the other 90% as a
     MATERIALIZED SimHash index (sign-once contract for the Hamming
-    family; the index is rebuilt untimed in main() each run —
+    family; the index is rebuilt untimed by warm_indexes each run —
     timed reps measure the per-batch join only)."""
     from remote_storage_adapter_spark.operators import dedup as D
 
@@ -136,7 +142,7 @@ def bench_text_search_indexed(spark, sf_dir):
     """Probe of the materialized bucket-partitioned inverted index
     (BM25 retrieval without touching the corpus — partition-pruned to
     the query terms' buckets). The index build is warmed untimed in
-    main(); this measures the probe path only."""
+    warm_indexes(); this measures the probe path only."""
     from remote_storage_adapter_spark.operators import text as TX
     from remote_storage_adapter_spark.queries import (
         SEARCH_QUERY,
@@ -151,8 +157,8 @@ def bench_text_search_indexed(spark, sf_dir):
 def bench_simsearch_lsh_indexed(spark, sf_dir):
     """Probe of the materialized bucket-partitioned LSH index — the
     plan actually run at 100× (partition pruning before the scan).
-    The index build is warmed untimed in main(); this measures the
-    probe path only."""
+    The index build is warmed untimed in warm_indexes(); this
+    measures the probe path only."""
     from remote_storage_adapter_spark.operators import similarity as S
     from remote_storage_adapter_spark.queries import (
         _query_vector,
@@ -168,7 +174,7 @@ def bench_simsearch_lsh_indexed(spark, sf_dir):
 def bench_simsearch_ivf_indexed(spark, sf_dir):
     """Probe of the materialized cell-partitioned IVF index (cell
     choice from the driver-held centroids, scan prunes to 4 of 16
-    cells). Index build is warmed untimed in main()."""
+    cells). Index build is warmed untimed in warm_indexes()."""
     import math
 
     from remote_storage_adapter_spark.operators import similarity as S
@@ -626,6 +632,33 @@ BENCH_QUERIES = {
 }
 
 
+#: rows that probe a materialized index: ``warm_indexes`` builds all
+#: but dedup_cross_join_indexed's, which that row builds on its first
+#: call (in bench, the untimed warm-up rep)
+NEEDS_INDEX = frozenset({
+    "simsearch_lsh_indexed", "simsearch_ivf_indexed",
+    "text_search_indexed", "dedup_simhash_indexed",
+    "dedup_cross_join_indexed",
+})
+
+
+def warm_indexes(spark, sf_dir):
+    """Build the materialized indexes the indexed rows probe, untimed:
+    those rows measure the PROBE (the recurring at-scale operation),
+    not the one-time build. The simhash index is overwrite-rebuilt on
+    every call (stale reuse would silently join against an outdated
+    reference) as a bucketed catalog table, so the timed probe joins
+    it with zero reference-side shuffle."""
+    from remote_storage_adapter_spark.operators import dedup as D
+
+    Q.q_simsearch_lsh_indexed(spark, sf_dir).count()
+    Q.q_simsearch_ivf_indexed(spark, sf_dir).count()
+    Q.q_text_search_indexed(spark, sf_dir).count()
+    docs = load_table(spark, sf_dir, "documents")
+    D.simhash_write_index(docs.filter(F.col("doc_id") % 10 != 0),
+                          _simhash_bench_table(sf_dir), max_hamming=3,
+                          buckets=16)
+
 
 def _machine_state():
     """Contention/cold-cache telemetry (VERDICT r6 next #2): the r6
@@ -646,241 +679,49 @@ def _machine_state():
             int(mem["Cached"].strip().split()[0]) / 1024 ** 2, 1)
     except Exception:
         pass
-    # r12: a deterministic single-core reference loop (~0.5 s). The
-    # r12 session measured code-identical cells uniformly 25-35%
-    # above r11's artifacts on a QUIET box (load1 0.12, steal 0.15%
-    # under full load) — load averages can't see a slower host/VM
-    # day, so the artifact carries its own CPU yardstick: compare
-    # cpu_ref_s across rounds before reading anything into a
-    # round-over-round total delta.
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i
-    state["cpu_ref_s"] = round(time.perf_counter() - t0, 3)
     return state
 
 
-def _pick_quiet_ref(cands, now=None):
-    """Pick the defensible quiet reference (VERDICT r12 wrong #3).
-
-    Fastest of the recent quiet runs at comparable page cache:
-    candidates older than 48 h are dropped (they measured different
-    code — the query-set equality check can't see within-set plan
-    changes), then candidates whose recorded cache is >30% colder
-    than the warmest candidate's are dropped (cold cache inflates
-    scan rows: text_shard_pack read 0.80 s warm vs 3.83 s on the
-    5 GB-colder r12 outlier) unless nothing warm remains, then the
-    smallest total wins. Candidates missing ts/cached_gb (older
-    artifact versions) are kept — unknown beats discarding the only
-    reference."""
-    cands = [c for c in cands if isinstance(c, dict)
-             and isinstance(c.get("value"), (int, float))]
-    if not cands:
-        return None
-    if now is not None:
-        fresh = [c for c in cands
-                 if not isinstance(c.get("ts"), (int, float))
-                 or now - c["ts"] <= 48 * 3600]
-        if not fresh:
-            # r14 (VERDICT r13 next #4): an all-stale pool used to
-            # return None — a multi-day gap between benches silently
-            # dropped the cross-round anchor the field exists to
-            # carry. Keep the NEWEST stale candidate, flagged, so the
-            # reader sees "this anchor measured old code" instead of
-            # losing the series. (Every candidate here has a numeric
-            # ts — candidates without one are never stale-dropped.)
-            newest = dict(max(cands, key=lambda c: c["ts"]))
-            newest["stale"] = True
-            return newest
-        cands = fresh
-    caches = [c["cached_gb"] for c in cands
-              if isinstance(c.get("cached_gb"), (int, float))]
-    if caches:
-        warm = max(caches)
-        ok = [c for c in cands
-              if not isinstance(c.get("cached_gb"), (int, float))
-              or c["cached_gb"] >= 0.7 * warm]
-        cands = ok or cands
-    return min(cands, key=lambda c: c["value"])
-
-
-def _round_artifact_refs(bench_dir, sf_val, query_keys):
-    """Seed the quiet-anchor pool from committed ``BENCH_r{N}.json``
-    round artifacts.
-
-    The local history (``BENCH_LOCAL.json``) is gitignored, so every
-    round boundary hands the next session a fresh checkout with an
-    EMPTY candidate pool — the first bench of each round shipped no
-    ``quiet_ref`` at all, dropping the cross-round anchor exactly at
-    the boundary it exists to span. The driver's committed round
-    artifacts carry each round's chosen quiet anchor, so harvest
-    those: same sf, same query set (the within-set plan-change guard
-    the local path already applies), and ONLY the embedded
-    ``quiet_ref`` dicts with a numeric ``ts``. The parsed line's own
-    total is deliberately not a candidate: it carries no timestamp,
-    a fresh checkout resets file mtimes to now, and an undatable
-    value must not enter a pool where missing-ts means never-stale —
-    an old round's number could then win forever. Staleness stays
-    the picker's job: a >48 h anchor survives only flagged
-    ``stale: true``."""
-    refs = []
-    try:
-        names = [n for n in os.listdir(bench_dir)
-                 if n.startswith("BENCH_r") and n.endswith(".json")]
-    except OSError:
-        return refs
-    for name in sorted(names):
-        try:
-            with open(os.path.join(bench_dir, name)) as fh:
-                art = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        parsed = art.get("parsed") if isinstance(art, dict) else None
-        if not isinstance(parsed, dict):
-            continue
-        if parsed.get("sf") != sf_val:
-            continue
-        if set(parsed.get("queries") or {}) != set(query_keys):
-            continue
-        qr = parsed.get("quiet_ref")
-        if (isinstance(qr, dict)
-                and isinstance(qr.get("value"), (int, float))
-                and isinstance(qr.get("ts"), (int, float))):
-            refs.append(qr)
-    return refs
-
-
-def _wait_for_quiet(max_wait_s, threshold=2.0, *, poll_s=15.0,
-                    loadavg=None, sleep=None, clock=None):
-    """Bounded wait for load1 to decay below ``threshold`` (VERDICT
-    r13 next #6 / wrong #1): the official r13 bench started seconds
-    after a parity run finished and its headline read ~10% above
-    code-true from a load average still decaying from FINISHED work.
-    Returns the seconds waited (0.0 when the budget is zero). The
-    injectable ``loadavg``/``sleep``/``clock`` are for the unit
-    locks; OSError from loadavg (some containers) aborts the wait —
-    a blind sleep can't know when to stop."""
-    loadavg = loadavg or (lambda: os.getloadavg()[0])
-    sleep = sleep or time.sleep
-    clock = clock or time.time
-    t0 = clock()
-    if max_wait_s <= 0:
-        return 0.0
-    while clock() - t0 < max_wait_s:
-        sleep(min(poll_s, max_wait_s))
-        try:
-            if loadavg() <= threshold:
-                break
-        except OSError:
-            break
-    return round(clock() - t0, 1)
-
-
-def _probe_job_ref(spark, n=10):
-    """Median wall of ``n`` one-row jobs, in ms — the per-job
-    scheduling constant canary (r12). In-run block probes (r15) use a
-    smaller ``n`` to bound the untimed overhead they add between
-    rows."""
-    ts = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        spark.range(1).count()
-        ts.append(time.perf_counter() - t0)
-    return round(1000 * sorted(ts)[len(ts) // 2], 1)
-
-
-def _job_ref_stats(probes):
-    """(median, unstable) over the run's job-ref probe series (r15,
-    VERDICT r14 next #1). The MEDIAN is the constant the run
-    typically paid — the r14 min-of-endpoints estimator missed a
-    mid-run burst that both endpoints missed and the normalized view
-    OVER-read the raw total. ``unstable`` flags (never inverts) the
-    normalized view when probes disagree >2×: per-row normalization
-    against a bursty series is still the best available estimate, but
-    a reader must know the constant moved under the run."""
-    vals = [v for v in (probes or [])
-            if isinstance(v, (int, float)) and v > 0]
-    if not vals:
-        return None, False
-    vals = sorted(vals)
-    med = vals[len(vals) // 2]
-    return med, (vals[-1] / vals[0]) > 2.0
-
-
-def _effective_job_ref(start_ms, end_ms):
-    """The job constant to normalize WITH: min of the start/end probes.
-
-    r14: the r12/r13 model assumed one probe represents the whole
-    session, and on those hosts it did (drift was slow). The r14 host
-    breaks the assumption — /proc/stat showed hypervisor steal BURSTS
-    of up to 15% of total machine capacity for minutes at a time, and
-    probes minutes apart read 1400 -> 76 ms and 202 -> 60-96 ms. A
-    2-second probe window that lands in a burst poisons the whole
-    normalized view: every row's job-bound estimate saturates at the
-    wall clamp and 'normalization' degenerates into multiplying the
-    total by ref/env. A burst rarely spans BOTH endpoints of a
-    multi-minute run, so the min of the two probes is the closest
-    available estimate of the constant most rows actually paid —
-    still conservative (high) whenever any burst covers both."""
-    vals = [v for v in (start_ms, end_ms)
-            if isinstance(v, (int, float)) and v > 0]
-    return min(vals) if vals else None
-
-
-def _normalize_rows(timings, stage_counts, env_job_ref_ms,
-                    ref_job_ref_ms, row_refs=None):
-    """Canary-normalized per-row view (VERDICT r13 next #1).
-
-    The host's per-JOB scheduling constant has drifted 120-195 ms
-    across r12/r13 sessions (healthy norm: tens of ms), so raw
-    cross-round totals conflate host drift with code change. The
-    validated model (BENCH_NOTES r13 "The normalized model") is
-
-        wall = work + n_stage_equivalents × job_ref
-
-    — stage-rich sub-second rows inflate by ~the full job_ref ratio,
-    scan-bound rows stay ~flat. This automates the hand arithmetic:
-    each row's job-bound share (its measured stages-per-rep × this
-    run's job_ref) is re-priced at the reference run's job_ref, the
-    work share is left untouched:
-
-        normalized = (wall − jb) + jb × ref_job_ref / env_job_ref,
-        jb = min(wall, stages_per_rep × env_job_ref)
-
-    The stage counts come from the StatusTracker over per-row job
-    groups — actual scheduled stages, not a guess (skipped/reused
-    stages are included, which overstates jb slightly; the min(wall)
-    clamp bounds the error and the raw inputs ship in BENCH_LOCAL so
-    a reader can re-derive with their own model). Returns
-    ``(per_row_dict, total)`` or ``(None, None)`` when either job_ref
-    canary is missing — normalization is only defensible against a
-    reference that recorded its own constant.
-
-    r15 (VERDICT r14 next #1): ``row_refs`` — a {row: job_ref_ms} map
-    from the in-run probe series — supplies each row's OWN constant
-    (min of the probes bracketing its 5-row block), so a mid-run
-    burst re-prices only the rows that actually ran under it. The
-    scalar ``env_job_ref_ms`` stays the fallback for rows without a
-    probe record (and for the pre-r15 unit locks).
-    """
-    if not (isinstance(env_job_ref_ms, (int, float))
-            and env_job_ref_ms > 0
-            and isinstance(ref_job_ref_ms, (int, float))
-            and ref_job_ref_ms > 0):
-        return None, None
+def row_layers(log_dir, reps):
+    """Each row's engine work per timed rep: the counters of its job
+    group ``bench-{name}`` in the event log under ``log_dir``, divided
+    by the row's rep count. The warm-up group ``bench-warm-{name}`` is
+    not counted. Read the log only after the session stopped, when it
+    is complete."""
+    groups = group_counters(log_dir)
     out = {}
-    for name, wall in timings.items():
-        rec = stage_counts.get(name) or {}
-        reps = rec.get("reps") or 1
-        stages = (rec.get("stages") or 0) / reps
-        row_ref = (row_refs or {}).get(name)
-        if not (isinstance(row_ref, (int, float)) and row_ref > 0):
-            row_ref = env_job_ref_ms
-        scale = ref_job_ref_ms / row_ref
-        jb = min(wall, stages * row_ref / 1000.0)
-        out[name] = round(max(wall - jb * (1.0 - scale), 0.0), 3)
-    return out, round(sum(out.values()), 3)
+    for name, n in reps.items():
+        rec = groups.get(f"bench-{name}", {})
+        out[name] = {k: round(rec.get(k, 0) / n, 2) for k in COUNTERS}
+    return out
+
+
+def final_line(record):
+    """The run's last stdout line, a compact view of the run record:
+    2-dp walls, no spread map, so that it stays under a 2,000-char
+    tail capture with every row in ``queries`` (r4's line with 36
+    spreads at 3-dp overflowed it and the round's bench went unparsed
+    — VERDICT r4 wrong #1)."""
+    env_start, env_end = record["env_start"], record["env_end"]
+    return json.dumps({
+        "metric": record["metric"],
+        "value": record["value"],
+        "unit": record["unit"],
+        "queries": {k: round(v, 2) for k, v in record["queries"].items()},
+        # r9 verdict #3: machine state in the parsed line — load1 over
+        # ~2 at either end, or a page cache that shrank mid-run, marks
+        # the artifact contaminated; reps summarizes the per-row rep
+        # floor (full map in BENCH_LOCAL.json)
+        "env": {
+            "load1_start": env_start.get("load1"),
+            "load1_end": env_end.get("load1"),
+            "cached_gb_start": env_start.get("cached_gb"),
+            "cached_gb_end": env_end.get("cached_gb"),
+            "reps_min": min(record["reps"].values()),
+            "reps_max": max(record["reps"].values()),
+        },
+        "sf": record["sf"],
+    }, separators=(",", ":"))
 
 
 def _emit_final_line(line, spark):
@@ -932,68 +773,11 @@ def _emit_final_line(line, spark):
     print(line, flush=True)
 
 
-def main():
-    # capture BEFORE the session spins up: a bench started on a busy
-    # machine (pytest, sf1 generation, another Spark) is the one
-    # documented way to get unexplainable per-row inflation
-    env_start = _machine_state()
-    # r14 (VERDICT r13 next #6 / wrong #1): the official r13 bench
-    # started seconds after a parity run finished — load1 was still
-    # decaying from FINISHED work and the headline read ~10% above
-    # code-true. When the start is busy, wait (bounded, env-gated so
-    # the driver's timeout stays safe; 0 disables) for load1 to decay
-    # below the threshold, then re-measure the canaries: cpu_ref and
-    # job_ref taken during the decay would stamp the whole artifact
-    # with a constant the run no longer pays.
-    quiet_wait_s = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_QUIET_WAIT_S", "300"))
-    if env_start.get("load1", 0.0) > 2.0 and quiet_wait_s > 0:
-        print(f"# busy start (load1={env_start['load1']}): waiting "
-              f"up to {quiet_wait_s:.0f}s for load1 <= 2.0",
-              file=sys.stderr)
-        waited = _wait_for_quiet(quiet_wait_s)
-        env_start = _machine_state()
-        env_start["quiet_wait_s"] = waited
-    if env_start.get("load1", 0.0) > 2.0:
-        print(f"# WARNING: load1={env_start['load1']} at bench start "
-              f"— concurrent work inflates rows (r6: up to 10x on "
-              f"short rows); results suspect", file=sys.stderr)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM, parquet footers, and the Python/Arrow worker pool
-    # once so timings measure the queries, not process startup
-    load_table(spark, sf_dir, "events").count()
-    import pandas as pd  # noqa: F401
-
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
-    # r12 second environment canary: per-JOB scheduling latency. The
-    # r12 session saw short rows inflate ~1.3-2.2× vs r11 on a quiet,
-    # zero-steal box while long scans stayed ~flat — the signature of
-    # a higher per-job constant (129 ms/1-task job measured vs the
-    # tens-of-ms normal), which multiplies into every stage-rich
-    # short row. Recorded so a cross-round total delta can be
-    # attributed before anyone chases plan regressions.
-    env_start["job_ref_ms"] = _probe_job_ref(spark)
-    # build the materialized ANN indexes untimed: the indexed bench
-    # rows measure the PROBE (the recurring at-scale operation), not
-    # the one-time build
-    Q.q_simsearch_lsh_indexed(spark, sf_dir).count()
-    Q.q_simsearch_ivf_indexed(spark, sf_dir).count()
-    Q.q_text_search_indexed(spark, sf_dir).count()
-    # simhash index: overwrite-rebuild each run (stale reuse would
-    # silently join against an outdated reference); bucketed catalog
-    # table — the timed probe joins it with zero reference-side
-    # shuffle
+def _time_rows(spark, sf_dir):
+    """Time every row: one untimed warm-up rep in job group
+    ``bench-warm-{name}``, then the timed reps in ``bench-{name}``.
+    Returns the run record's per-row fields, in registry order."""
     from remote_storage_adapter_spark.operators import dedup as _D
-    _docs = load_table(spark, sf_dir, "documents")
-    _D.simhash_write_index(_docs.filter(F.col("doc_id") % 10 != 0),
-                           _simhash_bench_table(sf_dir), max_hamming=3,
-                           buckets=16)
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     # queries whose r3→r4 deltas sat inside their measured spread get
@@ -1037,26 +821,8 @@ def main():
     random.Random(order_seed).shuffle(bench_order)
     print(f"# bench order seed: {order_seed}", file=sys.stderr)
     timings, spread, rep_counts, raw_runs = {}, {}, {}, {}
-    # r14 (VERDICT r13 next #1): per-row scheduled-stage counts feed
-    # the canary-normalized view. Each row's TIMED reps run under
-    # their own job group; the StatusTracker then reports that
-    # group's jobs and their stage lists — public API, zero extra
-    # Spark jobs, read immediately after the row so retention limits
-    # (spark.ui.retained*) can't age the records out.
-    stage_counts = {}
     sc = spark.sparkContext
-    # r15 (VERDICT r14 next #1): in-run job-ref probe series. The r14
-    # official run was stalled 2.8-4.4× mid-run while BOTH endpoint
-    # probes read healthy, so min-of-endpoints normalization inverted
-    # (normalized > raw). Probe the constant at every 5-row block
-    # boundary (6 one-row jobs each, untimed — outside every row's
-    # reps); each row then normalizes against the min of the two
-    # probes bracketing its own block, so a burst re-prices only the
-    # rows that ran under it.
-    probe_block = 5
-    probes = [env_start.get("job_ref_ms")]
-    row_block = {}
-    for pos, name in enumerate(bench_order):
+    for name in bench_order:
         fn = BENCH_QUERIES[name]
         # one untimed warm-up rep per query: the first run pays
         # one-time costs the operator doesn't own (shuffle-file
@@ -1074,15 +840,13 @@ def main():
         # dedup_minhash_lsh was this, not a plan change). Releasing
         # between reps makes every rep the full cold operator: honest
         # and iid (measured spread ≤10% vs bimodal before).
-        from remote_storage_adapter_spark.operators import dedup as _D
-
         sc.setJobGroup(f"bench-warm-{name}", "untimed warm-up rep")
         fn(spark, sf_dir).count()
         _D.unpersist_pinned(blocking=True)
         # settle the JVM before timing: evicted cache blocks and
         # shuffle buffers from the previous query otherwise surface as
         # GC pauses inside this query's reps (untimed, ~100 ms)
-        spark.sparkContext._jvm.System.gc()
+        sc._jvm.System.gc()
         sc.setJobGroup(f"bench-{name}", "timed reps")
         n_reps = extra_reps.get(name, reps)
         runs = []
@@ -1102,23 +866,6 @@ def main():
                 # noisy sub-1.5 s steady-state rows escape the floor.
                 n_reps = max(n_reps, 7)
         rep_counts[name] = n_reps
-        # harvest the timed group's scheduled stages (includes any
-        # eager plan-construction actions the row pays per call —
-        # those ARE part of its per-call job-bound cost)
-        try:
-            st = sc.statusTracker()
-            n_jobs = n_stages = 0
-            for jid in st.getJobIdsForGroup(f"bench-{name}"):
-                ji = st.getJobInfo(jid)
-                if ji is None:
-                    continue
-                n_jobs += 1
-                n_stages += len(ji.stageIds)
-            stage_counts[name] = {"jobs": n_jobs, "stages": n_stages,
-                                  "reps": n_reps}
-        except Exception:  # tracker unavailable — view degrades only
-            stage_counts[name] = {"jobs": 0, "stages": 0,
-                                  "reps": n_reps}
         runs.sort()
         timings[name] = round(runs[len(runs) // 2], 3)  # median
         # max-min inflates mechanically with rep count and one fs
@@ -1131,220 +878,89 @@ def main():
         raw_runs[name] = [round(r, 3) for r in runs]
         print(f"# {name}: {timings[name]}s median of {n_reps} "
               f"(spread {spread[name]}s, {n} rows)", file=sys.stderr)
-        row_block[name] = pos // probe_block
-        if ((pos + 1) % probe_block == 0
-                and (pos + 1) < len(bench_order)):
-            sc.setJobGroup("bench-probe", "untimed job_ref block probe")
-            probes.append(_probe_job_ref(spark, n=6))
 
     # report in the canonical registry order regardless of the run's
     # rotation — round-over-round artifact diffs stay line-stable
-    timings = {k: timings[k] for k in BENCH_QUERIES}
-    spread = {k: spread[k] for k in BENCH_QUERIES}
-    rep_counts = {k: rep_counts[k] for k in BENCH_QUERIES}
-    raw_runs = {k: raw_runs[k] for k in BENCH_QUERIES}
-    total = round(sum(timings.values()), 3)
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # full-precision record (incl. spread) goes to a file; the printed
-    # line must stay well under the driver's 2,000-char tail capture
-    # (r4's line with 36 spreads at 3-dp overflowed it and the round's
-    # bench went unparsed — VERDICT r4 wrong #1), so print a compact
-    # 2-dp line without the spread map
-    # end-of-run canaries probed while Spark is still alive: the
-    # second endpoint the burst-robust job-constant estimate needs
-    # (see _effective_job_ref)
-    env_end = _machine_state()
-    env_end["job_ref_ms"] = _probe_job_ref(spark)
-    probes.append(env_end["job_ref_ms"])
-    row_refs = {}
-    for name, blk in row_block.items():
-        lo = probes[blk] if blk < len(probes) else None
-        hi = probes[blk + 1] if blk + 1 < len(probes) else None
-        ref = _effective_job_ref(lo, hi)
-        if ref is not None:
-            row_refs[name] = ref
-    job_ref_med, job_ref_unstable = _job_ref_stats(probes)
-    full = {
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "spread": spread,
+    return {
+        "queries": {k: timings[k] for k in BENCH_QUERIES},
+        "spread": {k: spread[k] for k in BENCH_QUERIES},
         # per-query actual rep counts — the extra_reps rows run more
         # than the base (ADVICE r5: a single scalar misstated exactly
         # those rows); base_reps is the configured default
-        "reps": rep_counts,
+        "reps": {k: rep_counts[k] for k in BENCH_QUERIES},
         "base_reps": reps,
         # sorted per-rep walls: max-min 'spread' inflates with rep
         # count; the raw runs let a reader compute robust stats
-        "runs": raw_runs,
-        # machine state at run start/end: a load1 over ~2 or a
-        # cache that shrank mid-run marks the session contaminated
-        "env_start": env_start,
-        "env_end": env_end,
+        "runs": {k: raw_runs[k] for k in BENCH_QUERIES},
         # per-run row-order rotation (r7 verdict #7): the seed
         # reproduces the order; the order itself shows which rows ran
         # late (where ambient contention lands)
         "order_seed": order_seed,
         "order": bench_order,
-        "ts": round(time.time(), 1),
-        "sf": sf_val,
     }
+
+
+def main():
+    # capture BEFORE the session spins up: a bench started on a busy
+    # machine (pytest, sf1 generation, another Spark) is the one
+    # documented way to get unexplainable per-row inflation
+    env_start = _machine_state()
+    if env_start.get("load1", 0.0) > 2.0:
+        print(f"# WARNING: load1={env_start['load1']} at bench start "
+              f"— concurrent work inflates rows (r6: up to 10x on "
+              f"short rows); results suspect", file=sys.stderr)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # the event log says where each row's time went (jobs, stages,
+    # task CPU, bytes): it is folded per row's job group into the
+    # record's "layers" once the session has stopped. The log grows to
+    # ~400 MB at sf0.1, so a SIGTERM (a timeout's kill) unwinds through
+    # the finally below instead of leaving it behind.
+    import signal
+
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    log_dir = tempfile.mkdtemp(prefix="spark_graft_bench_events_")
+    try:
+        spark = get_spark("bench", extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": pathlib.Path(log_dir).as_uri(),
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        })
+        spark.sparkContext.setLogLevel("ERROR")
+
+        # warm the JVM, parquet footers, and the Python/Arrow worker
+        # pool once so timings measure the queries, not process startup
+        load_table(spark, sf_dir, "events").count()
+        import pandas as pd  # noqa: F401
+
+        spark.range(64).repartition(32).mapInPandas(
+            lambda it: (pdf for pdf in it), "id long"
+        ).count()
+        warm_indexes(spark, sf_dir)
+
+        timed = _time_rows(spark, sf_dir)
+        record = {
+            "metric": "headline_queries_total_runtime",
+            "value": round(sum(timed["queries"].values()), 3),
+            "unit": "sec",
+            **timed,
+            # machine state at run start/end: a load1 over ~2 or a
+            # cache that shrank mid-run marks the session contaminated
+            "env_start": env_start,
+            "env_end": _machine_state(),
+            "ts": round(time.time(), 1),
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        }
+        _emit_final_line(final_line(record), spark)
+        record["layers"] = row_layers(log_dir, record["reps"])
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "BENCH_LOCAL.json")
-    # r12 (VERDICT r11 next #5): a busy box at start is the one
-    # documented source of unexplainable per-row inflation, and r11's
-    # official artifact was taken at load1 6.77 — make the artifact
-    # SELF-DEFENDING: a machine-readable busy flag in the parsed
-    # line, plus the most recent quiet-start BENCH_LOCAL total for
-    # side-by-side adjudication (same harness, same sf; recorded only
-    # when that run started under the threshold). Read BEFORE the
-    # overwrite below.
-    busy_start = env_start.get("load1", 0.0) > 2.0
-    # r13 (VERDICT r12 wrong #3): quiet_ref used to inherit the most
-    # RECENT quiet run, which in r12 was a 5 GB-colder-cache outlier
-    # (65.5 s) while the same round's warm quiet run (51.0 s) was
-    # available — a reader overstated the quiet total by ~28%. Now
-    # every run (quiet or busy) maintains the best recent quiet
-    # reference: candidates are this run (if quiet), the previous
-    # run (if quiet), and the previous run's carried quiet_ref;
-    # candidates >48 h old or with a page cache >30% colder than the
-    # warmest candidate's are rejected, then the FASTEST wins. The
-    # chosen ref carries cached_gb/job_ref_ms/cpu_ref_s/ts so the
-    # next reader can judge its comparability (cpu_ref_s added r14:
-    # the r14 session's host measured 1.5-1.8x slower single-core
-    # than r13's at a SIMILAR job constant — the two canaries move
-    # independently, so an anchor needs both on it to be judged).
-    # r15: the run's representative constant is the MEDIAN of the
-    # in-run probe series (the r14 min-of-endpoints estimate missed a
-    # mid-run burst and inverted the normalized view); the endpoint
-    # min stays as the fallback when the series is somehow empty.
-    eff_job_ref = job_ref_med
-    if eff_job_ref is None:
-        eff_job_ref = _effective_job_ref(env_start.get("job_ref_ms"),
-                                         env_end.get("job_ref_ms"))
-    cands = []
-    if not busy_start:
-        # the candidate's job_ref_ms is the burst-robust estimate,
-        # not the raw start probe: this value becomes the target
-        # constant LATER rounds normalize to — a burst-poisoned probe
-        # recorded here would corrupt every future normalized view
-        # anchored on this run
-        cands.append({"value": total,
-                      "load1_start": env_start.get("load1"),
-                      "cached_gb": env_start.get("cached_gb"),
-                      "job_ref_ms": eff_job_ref,
-                      "cpu_ref_s": env_start.get("cpu_ref_s"),
-                      "ts": full["ts"]})
-    try:
-        with open(out_path) as fh:
-            prev = json.load(fh)
-        if (prev.get("sf") == sf_val
-                and set(prev.get("queries", {})) == set(timings)):
-            pes = prev.get("env_start", {})
-            if pes.get("load1", 99.0) <= 2.0:
-                cands.append({"value": prev["value"],
-                              "load1_start": pes.get("load1"),
-                              "cached_gb": pes.get("cached_gb"),
-                              "job_ref_ms": pes.get("job_ref_ms"),
-                              "cpu_ref_s": pes.get("cpu_ref_s"),
-                              "ts": prev.get("ts")})
-            if isinstance(prev.get("quiet_ref"), dict):
-                # a busy prev carries its own quiet reference — keep
-                # it in the pool so a run of busy sessions never
-                # loses the last quiet total
-                cands.append(prev["quiet_ref"])
-    except Exception:
-        pass
-    # r14: the local history above is gitignored and every round
-    # boundary is a fresh checkout — seed the pool from the committed
-    # round artifacts so the first bench of a session still carries
-    # the previous round's quiet anchor (see _round_artifact_refs).
-    cands.extend(_round_artifact_refs(
-        os.path.dirname(out_path), sf_val, set(timings)))
-    quiet_ref = _pick_quiet_ref(cands, now=full["ts"])
-    full["busy_start"] = busy_start
-    if quiet_ref is not None:
-        full["quiet_ref"] = quiet_ref
-    # r14 (VERDICT r13 next #1): machine-readable canary-normalized
-    # view — the full artifact carries the model INPUTS (per-row
-    # stage counts) and the per-row normalized walls; the printed
-    # line carries the normalized total. Normalized TO the quiet
-    # reference's job constant, so normalized_value is directly
-    # comparable to quiet_ref.value.
-    full["stage_counts"] = stage_counts
-    # r15: the raw probe series + per-row constants ship with the
-    # artifact so a reader can re-derive the view with their own model
-    full["job_ref_series"] = probes
-    full["job_ref_row_refs"] = row_refs
-    if job_ref_unstable:
-        full["job_ref_unstable"] = True
-    norm_rows, norm_total = (None, None)
-    if quiet_ref is not None:
-        norm_rows, norm_total = _normalize_rows(
-            timings, stage_counts, eff_job_ref,
-            quiet_ref.get("job_ref_ms"), row_refs)
-    if norm_total is not None:
-        full["normalized_queries"] = norm_rows
-        full["normalized_value"] = norm_total
-        full["normalized_to_job_ref_ms"] = quiet_ref.get("job_ref_ms")
-        full["normalized_env_job_ref_ms"] = eff_job_ref
     with open(out_path, "w") as fh:
-        json.dump(full, fh, indent=1)
+        json.dump(record, fh, indent=1)
         fh.write("\n")
-    env_end = full["env_end"]
-    compact = {
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        # r9 verdict #3: the +20% BENCH_r09 total was adjudicated
-        # environmental, but the shipped JSON couldn't show it — the
-        # machine-state telemetry lived only in gitignored
-        # BENCH_LOCAL.json. Ship it in the driver-parsed line: load1
-        # over ~2 at either end, or a page cache that shrank
-        # mid-run, marks the artifact contaminated; reps summarizes
-        # the per-row rep floor (full map in BENCH_LOCAL.json).
-        "env": {
-            "load1_start": env_start.get("load1"),
-            "load1_end": env_end.get("load1"),
-            "cached_gb_start": env_start.get("cached_gb"),
-            "cached_gb_end": env_end.get("cached_gb"),
-            "cpu_ref_s": env_start.get("cpu_ref_s"),
-            "job_ref_ms": env_start.get("job_ref_ms"),
-            # r15: median of the in-run probe series — the constant
-            # the run typically paid (job_ref_ms above is the start
-            # probe, kept for cross-round continuity)
-            "job_ref_med": job_ref_med,
-            "reps_min": min(rep_counts.values()),
-            "reps_max": max(rep_counts.values()),
-        },
-        "sf": sf_val,
-    }
-    if job_ref_unstable:
-        compact["job_ref_unstable"] = True
-    if busy_start:
-        compact["busy_start"] = True
-    # quiet_ref ships whenever present (r14 — it used to ride only
-    # busy lines): normalized_value is normalized TO its job
-    # constant, so a reader needs both to compare the rounds.
-    if quiet_ref is not None:
-        compact["quiet_ref"] = quiet_ref
-    if norm_total is not None:
-        compact["normalized_value"] = norm_total
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # belt-and-braces: never overflow the capture
-        fallback = {"metric": compact["metric"], "value": total,
-                    "unit": "sec", "env": compact["env"],
-                    "sf": sf_val}
-        if busy_start:
-            fallback["busy_start"] = True
-        if quiet_ref is not None:
-            fallback["quiet_ref"] = quiet_ref
-        if norm_total is not None:
-            fallback["normalized_value"] = norm_total
-        line = json.dumps(fallback, separators=(",", ":"))
-    _emit_final_line(line, spark)
 
 
 if __name__ == "__main__":

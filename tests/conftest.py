@@ -77,6 +77,8 @@ SLOW_TESTS = {
 }
 
 RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1"
+_SLOW_REASON = ("slow test gated by SPARK_GRAFT_SLOW_TESTS=1 "
+                "(verify-budget gate, r15)")
 
 
 def _collects_whole_suite(config) -> bool:
@@ -96,9 +98,7 @@ def _collects_whole_suite(config) -> bool:
 @pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(session, config, items):
     seen = set()
-    skip = pytest.mark.skip(
-        reason="slow test gated by SPARK_GRAFT_SLOW_TESTS=1 "
-               "(driver verify-budget gate, r15)")
+    skip = pytest.mark.skip(reason=_SLOW_REASON)
     for item in items:
         base = item.name.split("[", 1)[0]
         if base in SLOW_TESTS:
@@ -114,3 +114,14 @@ def pytest_collection_modifyitems(session, config, items):
             raise pytest.UsageError(
                 f"conftest SLOW_TESTS entries not collected (renamed "
                 f"or removed? update the list): {sorted(missing)}")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many slow tests the gate skipped, so a gated run is
+    not mistaken for the full suite."""
+    gated = sum(_SLOW_REASON in str(rep.longrepr)
+                for rep in terminalreporter.stats.get("skipped", []))
+    if gated:
+        terminalreporter.write_line(
+            f"{gated} slow tests skipped: SPARK_GRAFT_SLOW_TESTS is not "
+            f"1, so this is not the full suite")

@@ -1,11 +1,11 @@
-"""Bench artifact-delivery locks (VERDICT r12 wrong #1/#3).
+"""Bench artifact locks, without a SparkSession.
 
 r12's official BENCH_r12.json was ``parsed: null``: bench.py printed
 its one JSON line and THEN called spark.stop(), whose Python-daemon
 BrokenPipeError spew flooded the driver's 2,000-char combined tail
-capture. And the busy-run ``quiet_ref`` pointed at a 5 GB-colder-cache
-quiet outlier (65.5 s) when a 28%-faster warm quiet run (51.0 s) was
-available. These tests lock the two fixes without a SparkSession.
+capture. r4's line overflowed that capture by itself. These tests lock
+the line's delivery and size, and the per-row fold of the event log
+into BENCH_LOCAL.json's ``layers``.
 """
 
 import json
@@ -15,56 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _pick_quiet_ref  # noqa: E402
-
-
-class TestPickQuietRef:
-    def test_empty_and_garbage(self):
-        assert _pick_quiet_ref([]) is None
-        assert _pick_quiet_ref([None, "x", {"no_value": 1}]) is None
-
-    def test_fastest_wins_at_comparable_cache(self):
-        a = {"value": 51.0, "cached_gb": 10.0, "ts": 1000.0}
-        b = {"value": 65.5, "cached_gb": 9.5, "ts": 2000.0}
-        assert _pick_quiet_ref([b, a], now=2000.0)["value"] == 51.0
-
-    def test_r12_cold_cache_outlier_rejected(self):
-        # the literal r12 scenario: the more RECENT quiet run was the
-        # 5 GB-colder outlier; old logic shipped 65.5, new picks 51.0
-        warm = {"value": 51.0, "cached_gb": 10.2, "ts": 1000.0}
-        cold = {"value": 65.5, "cached_gb": 5.1, "ts": 2000.0}
-        assert _pick_quiet_ref([cold, warm], now=2000.0)["value"] == 51.0
-
-    def test_cold_but_faster_still_rejected_by_cache_gate(self):
-        # >30% colder cache → out of the pool even if its total is
-        # lower (a cold-cache total isn't comparable either way)
-        warm = {"value": 60.0, "cached_gb": 10.0}
-        cold = {"value": 55.0, "cached_gb": 6.0}
-        assert _pick_quiet_ref([cold, warm])["value"] == 60.0
-
-    def test_all_cold_falls_back_to_fastest(self):
-        # the gate compares within the pool: if every candidate sits
-        # at the same (cold) cache there is nothing warmer to prefer
-        a = {"value": 70.0, "cached_gb": 5.0}
-        b = {"value": 66.0, "cached_gb": 5.2}
-        assert _pick_quiet_ref([a, b])["value"] == 66.0
-
-    def test_stale_candidate_dropped(self):
-        old = {"value": 40.0, "cached_gb": 10.0, "ts": 0.0}
-        new = {"value": 50.0, "cached_gb": 10.0, "ts": 49 * 3600.0}
-        got = _pick_quiet_ref([old, new], now=50 * 3600.0)
-        assert got["value"] == 50.0
-
-    def test_legacy_candidate_without_ts_or_cache_kept(self):
-        # r12-era quiet_ref carried only value/load1_start — unknown
-        # metadata must not discard the only reference
-        legacy = {"value": 51.0, "load1_start": 0.3}
-        assert _pick_quiet_ref([legacy], now=1e9)["value"] == 51.0
-
-    def test_metadata_carried_through(self):
-        c = {"value": 42.0, "cached_gb": 9.0, "job_ref_ms": 33.0,
-             "ts": 10.0, "load1_start": 0.1}
-        assert _pick_quiet_ref([c], now=10.0) == c
+import bench  # noqa: E402
 
 
 def test_final_line_is_last_bytes_despite_stop_spew(tmp_path):
@@ -98,279 +49,69 @@ def test_final_line_is_last_bytes_despite_stop_spew(tmp_path):
     assert "BrokenPipeError" not in combined
 
 
-class TestStaleAnchor:
-    """r14 (VERDICT r13 next #4): an all-stale pool ships the newest
-    candidate flagged ``stale`` instead of dropping the anchor."""
-
-    def test_all_stale_returns_newest_flagged(self):
-        a = {"value": 40.0, "cached_gb": 10.0, "ts": 0.0}
-        b = {"value": 50.0, "cached_gb": 10.0, "ts": 3600.0}
-        got = _pick_quiet_ref([a, b], now=80 * 3600.0)
-        assert got["value"] == 50.0  # newest, NOT fastest
-        assert got["stale"] is True
-
-    def test_fresh_candidate_suppresses_stale_flag(self):
-        old = {"value": 40.0, "cached_gb": 10.0, "ts": 0.0}
-        new = {"value": 50.0, "cached_gb": 10.0, "ts": 79 * 3600.0}
-        got = _pick_quiet_ref([old, new], now=80 * 3600.0)
-        assert got["value"] == 50.0
-        assert "stale" not in got
-
-    def test_stale_flag_carries_forward(self):
-        # a stale ref re-entering the pool (carried by a busy run's
-        # artifact) stays flagged when re-picked via the stale path
-        a = {"value": 40.0, "ts": 0.0, "stale": True}
-        got = _pick_quiet_ref([a], now=80 * 3600.0)
-        assert got["stale"] is True
-
-    def test_no_ts_candidates_never_go_stale(self):
-        legacy = {"value": 51.0}
-        got = _pick_quiet_ref([legacy], now=1e12)
-        assert got["value"] == 51.0
-        assert "stale" not in got
+def test_final_line_fits_capture_with_every_row():
+    """All 64 rows at a 5-char wall, the widest env a host gives: the
+    line keeps its contract keys and every row, under 1,900 chars."""
+    assert len(bench.BENCH_QUERIES) == 64
+    names = list(bench.BENCH_QUERIES)
+    env = {"load1": 123.45, "cached_gb": 1234.5}
+    line = bench.final_line({
+        "metric": "headline_queries_total_runtime",
+        "value": 99.99 * len(names),
+        "unit": "sec",
+        "queries": dict.fromkeys(names, 99.99),
+        "reps": dict.fromkeys(names, 7),
+        "env_start": env,
+        "env_end": env,
+        "sf": 0.1,
+    })
+    assert len(line) < 1900
+    got = json.loads(line)
+    assert {"metric", "value", "unit", "queries", "env"} <= set(got)
+    assert list(got["queries"]) == names
+    assert set(got["queries"].values()) == {99.99}
 
 
-class TestRoundArtifactRefs:
-    """r14: the quiet-anchor pool survives the round boundary — the
-    gitignored local history dies with the checkout, so the committed
-    ``BENCH_r{N}.json`` artifacts seed the pool (embedded quiet_ref
-    dicts only; same sf, same query set, numeric ts required)."""
-
-    QK = {"q1", "q2"}
-
-    def _art(self, tmp_path, name, parsed):
-        (tmp_path / name).write_text(json.dumps(
-            {"n": 14, "parsed": parsed}))
-
-    def test_harvests_matching_quiet_refs(self, tmp_path):
-        from bench import _round_artifact_refs
-        qr = {"value": 47.2, "cached_gb": 8.8, "job_ref_ms": 123.3,
-              "ts": 1000.0}
-        self._art(tmp_path, "BENCH_r13.json", {
-            "sf": 0.1, "queries": {"q1": 1.0, "q2": 2.0},
-            "quiet_ref": qr})
-        got = _round_artifact_refs(str(tmp_path), 0.1, self.QK)
-        assert got == [qr]
-
-    def test_sf_and_query_set_guards(self, tmp_path):
-        from bench import _round_artifact_refs
-        qr = {"value": 47.2, "ts": 1000.0}
-        self._art(tmp_path, "BENCH_r11.json", {
-            "sf": 0.01, "queries": {"q1": 1.0, "q2": 2.0},
-            "quiet_ref": qr})
-        self._art(tmp_path, "BENCH_r12.json", {
-            "sf": 0.1, "queries": {"q1": 1.0, "q3": 2.0},
-            "quiet_ref": qr})
-        assert _round_artifact_refs(str(tmp_path), 0.1, self.QK) == []
-
-    def test_undatable_or_parsed_null_skipped(self, tmp_path):
-        from bench import _round_artifact_refs
-        # r12's real shape: parsed is null (flooded tail)
-        self._art(tmp_path, "BENCH_r12.json", None)
-        # a quiet_ref without ts must NOT enter the pool — missing ts
-        # means never-stale in the picker, so an undatable old-round
-        # value could win forever
-        self._art(tmp_path, "BENCH_r13.json", {
-            "sf": 0.1, "queries": {"q1": 1.0, "q2": 2.0},
-            "quiet_ref": {"value": 47.2}})
-        (tmp_path / "BENCH_r10.json").write_text("not json")
-        assert _round_artifact_refs(str(tmp_path), 0.1, self.QK) == []
-
-    def test_missing_dir_is_empty(self):
-        from bench import _round_artifact_refs
-        assert _round_artifact_refs("/nonexistent/xyz", 0.1,
-                                    self.QK) == []
-
-    def test_stale_round_anchor_survives_flagged_end_to_end(
-            self, tmp_path):
-        # composition with the picker: a >48 h round anchor is kept
-        # but flagged — the boundary-crossing behavior this helper
-        # plus next #4 exist to guarantee
-        from bench import _round_artifact_refs
-        qr = {"value": 47.2, "ts": 0.0}
-        self._art(tmp_path, "BENCH_r13.json", {
-            "sf": 0.1, "queries": {"q1": 1.0, "q2": 2.0},
-            "quiet_ref": qr})
-        pool = _round_artifact_refs(str(tmp_path), 0.1, self.QK)
-        got = _pick_quiet_ref(pool, now=80 * 3600.0)
-        assert got["value"] == 47.2 and got["stale"] is True
+def _job(job_id, group, stage_ids):
+    return {"Event": "SparkListenerJobStart", "Job ID": job_id,
+            "Stage IDs": stage_ids,
+            "Properties": {"spark.jobGroup.id": group}}
 
 
-class TestEffectiveJobRef:
-    """r14: burst-robust job constant — min of the start/end probes.
-    A 2-second probe window landing in a hypervisor steal burst reads
-    2-10x high (measured 1400 vs 76 ms minutes apart); a burst rarely
-    spans both endpoints of a multi-minute run."""
-
-    def test_min_of_two(self):
-        from bench import _effective_job_ref
-        assert _effective_job_ref(202.4, 60.1) == 60.1
-        assert _effective_job_ref(60.1, 202.4) == 60.1
-
-    def test_single_or_missing_probe(self):
-        from bench import _effective_job_ref
-        assert _effective_job_ref(123.3, None) == 123.3
-        assert _effective_job_ref(None, 80.0) == 80.0
-        assert _effective_job_ref(None, None) is None
-        # zero / negative probes are garbage, not a constant
-        assert _effective_job_ref(0, None) is None
+def _stage_done(stage_id):
+    return {"Event": "SparkListenerStageCompleted",
+            "Stage Info": {"Stage ID": stage_id}}
 
 
-class TestNormalizeRows:
-    """r14 (VERDICT r13 next #1): the canary-normalized view — each
-    row's measured job-bound share re-priced at the reference run's
-    per-job constant."""
-
-    def _n(self, *a):
-        from bench import _normalize_rows
-        return _normalize_rows(*a)
-
-    def test_matched_canaries_are_identity(self):
-        t = {"q": 2.0}
-        s = {"q": {"jobs": 3, "stages": 6, "reps": 3}}
-        rows, total = self._n(t, s, 120.0, 120.0)
-        assert rows == {"q": 2.0} and total == 2.0
-
-    def test_job_bound_share_scales_down(self):
-        # 1 rep, 5 stages @ 200 ms env constant -> jb = 1.0 s of the
-        # 1.5 s wall; normalized to a 100 ms ref: 0.5 + 1.0*0.5 = 1.0
-        t = {"q": 1.5}
-        s = {"q": {"jobs": 1, "stages": 5, "reps": 1}}
-        rows, total = self._n(t, s, 200.0, 100.0)
-        assert rows == {"q": 1.0} and total == 1.0
-
-    def test_jb_clamped_at_wall(self):
-        # stage estimate exceeding the wall (skipped-stage overcount)
-        # must clamp: whole wall treated job-bound, scaled by ref/env
-        t = {"q": 0.4}
-        s = {"q": {"jobs": 9, "stages": 90, "reps": 1}}
-        rows, _ = self._n(t, s, 200.0, 100.0)
-        assert rows == {"q": 0.2}
-
-    def test_scales_up_when_ref_constant_is_higher(self):
-        # normalizing TO a slower-constant reference inflates the
-        # job-bound share — mathematically consistent, keeps
-        # normalized_value comparable to quiet_ref.value
-        t = {"q": 1.5}
-        s = {"q": {"jobs": 1, "stages": 5, "reps": 1}}
-        rows, _ = self._n(t, s, 100.0, 200.0)
-        assert rows == {"q": 2.0}
-
-    def test_stages_averaged_over_reps(self):
-        # 3 reps x 5 stages recorded as 15; per-rep share uses 5
-        t = {"q": 1.5}
-        s = {"q": {"jobs": 3, "stages": 15, "reps": 3}}
-        rows, _ = self._n(t, s, 200.0, 100.0)
-        assert rows == {"q": 1.0}
-
-    def test_missing_canary_disables_view(self):
-        t = {"q": 1.0}
-        s = {"q": {"jobs": 1, "stages": 1, "reps": 1}}
-        assert self._n(t, s, None, 100.0) == (None, None)
-        assert self._n(t, s, 100.0, None) == (None, None)
-        assert self._n(t, s, 0.0, 100.0) == (None, None)
-
-    def test_missing_stage_record_leaves_row_raw(self):
-        t = {"q": 1.0, "r": 1.0}
-        s = {"q": {"jobs": 1, "stages": 2, "reps": 1}}
-        rows, total = self._n(t, s, 200.0, 100.0)
-        assert rows["r"] == 1.0  # no stage data -> no adjustment
-        assert rows["q"] == 0.8
-        assert total == 1.8
-
-    def test_per_row_refs_override_scalar(self):
-        # r15 (VERDICT r14 next #1): a row that ran under a mid-run
-        # burst (its own bracketing probes read 400 ms) normalizes
-        # against ITS constant, not the run-level scalar (100 ms);
-        # a row without a probe record falls back to the scalar.
-        t = {"burst": 1.5, "quiet": 1.5}
-        s = {"burst": {"jobs": 1, "stages": 5, "reps": 1},
-             "quiet": {"jobs": 1, "stages": 5, "reps": 1}}
-        rows, _ = self._n(t, s, 100.0, 100.0, {"burst": 400.0})
-        # burst row: jb = min(1.5, 5*0.4) = 1.5 -> all job-bound,
-        # re-priced at 100/400: 1.5 * 0.25 = 0.375
-        assert rows["burst"] == 0.375
-        assert rows["quiet"] == 1.5  # matched constants -> identity
-
-    def test_garbage_row_ref_falls_back(self):
-        t = {"q": 1.5}
-        s = {"q": {"jobs": 1, "stages": 5, "reps": 1}}
-        rows, _ = self._n(t, s, 200.0, 100.0, {"q": -3.0})
-        assert rows == {"q": 1.0}  # same as the scalar-only path
+def _task(stage_id, cpu_ms, bytes_read, rows_read, shuffle=0):
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": stage_id,
+            "Task Metrics": {
+                "Executor CPU Time": cpu_ms * 1_000_000,
+                "Disk Bytes Spilled": 0,
+                "Shuffle Write Metrics": {"Shuffle Bytes Written": shuffle},
+                "Input Metrics": {"Bytes Read": bytes_read,
+                                  "Records Read": rows_read}}}
 
 
-class TestJobRefStats:
-    """r15 (VERDICT r14 next #1): run-level constant = MEDIAN of the
-    in-run probe series; >2x disagreement across probes flags (never
-    inverts) the normalized view."""
-
-    def _s(self, probes):
-        from bench import _job_ref_stats
-        return _job_ref_stats(probes)
-
-    def test_median_and_stable(self):
-        med, unstable = self._s([100.0, 120.0, 110.0])
-        assert med == 110.0 and unstable is False
-
-    def test_burst_flags_unstable(self):
-        med, unstable = self._s([100.0, 543.0, 110.0, 105.0, 98.0])
-        assert unstable is True
-        assert med == 105.0  # the burst probe does not drag the median
-
-    def test_exactly_2x_is_stable(self):
-        _, unstable = self._s([100.0, 200.0])
-        assert unstable is False
-
-    def test_empty_or_garbage(self):
-        assert self._s([]) == (None, False)
-        assert self._s([None, 0, -5]) == (None, False)
-        med, _ = self._s([None, 80.0])
-        assert med == 80.0
-
-
-class TestWaitForQuiet:
-    """r14 (VERDICT r13 next #6): bounded busy-start wait."""
-
-    def _run(self, loads, max_wait=300.0, poll=15.0):
-        from bench import _wait_for_quiet
-        t = [0.0]
-        it = iter(loads)
-
-        def clock():
-            return t[0]
-
-        def sleep(s):
-            t[0] += s
-
-        def loadavg():
-            return next(it)
-
-        return _wait_for_quiet(max_wait, poll_s=poll, loadavg=loadavg,
-                               sleep=sleep, clock=clock)
-
-    def test_returns_when_load_decays(self):
-        # decays below 2.0 on the third poll -> ~3 polls waited
-        assert self._run([4.0, 2.5, 1.2]) == 45.0
-
-    def test_budget_exhausted(self):
-        waited = self._run([9.9] * 100, max_wait=60.0, poll=15.0)
-        assert waited >= 60.0  # gave up at the budget, not earlier
-
-    def test_zero_budget_disables(self):
-        assert self._run([9.9], max_wait=0.0) == 0.0
-
-    def test_loadavg_oserror_aborts(self):
-        def boom():
-            raise OSError("no loadavg here")
-
-        from bench import _wait_for_quiet
-        t = [0.0]
-
-        def clock():
-            return t[0]
-
-        def sleep(s):
-            t[0] += s
-
-        assert _wait_for_quiet(300.0, loadavg=boom, sleep=sleep,
-                               clock=clock) == 15.0
+def test_row_layers_counts_only_the_timed_group(tmp_path):
+    """Row x's layers are its bench-x counters over its reps: the
+    warm-up group and the other groups are not counted."""
+    events = [
+        _job(0, "bench-warm-x", [0]), _stage_done(0),
+        _task(0, 1000, 10_000, 500),
+        _job(1, "bench-x", [1, 2]), _stage_done(1), _stage_done(2),
+        _task(1, 40, 800, 20, shuffle=64), _task(1, 20, 400, 10),
+        _task(2, 60, 0, 0),
+        _job(2, "bench-x", [3]), _stage_done(3),
+        _task(3, 80, 800, 30),
+        _job(3, "bench-probe", [4]), _stage_done(4),
+        _task(4, 7, 7, 7),
+    ]
+    (tmp_path / "local-1").write_text(
+        "".join(json.dumps(e) + "\n" for e in events))
+    layers = bench.row_layers(str(tmp_path), {"x": 2})
+    assert layers == {"x": {
+        "jobs": 1.0, "stages": 1.5, "tasks": 2.0, "task_cpu_ms": 100.0,
+        "shuffle_write_bytes": 32.0, "spill_bytes": 0.0,
+        "input_bytes": 1000.0, "input_rows": 30.0,
+        "scan_files": 0.0, "scan_partitions": 0.0}}

@@ -93,7 +93,8 @@ def _rep_canaries(spark):
     h = hashlib.md5()
     for _ in range(500_000):
         h.update(b"x" * 32)
-    # scaled to bench.py's 2M-iteration cpu_ref_s unit (x4)
+    # scaled to a 2M-iteration unit (x4), the unit of the cpu_ref_s
+    # that bench.py's artifacts carried through r15
     return {"job_ref_ms": round(1000 * ts[len(ts) // 2], 1),
             "cpu_ref_s": round(4 * (_t.perf_counter() - t0), 3)}
 

@@ -8,9 +8,9 @@ Writes ``plans/r<N>/<query>_<tag>.txt`` (tag = before|after, round dir
 from ``SPARK_GRAFT_PLANS_ROUND``, default r15) for each named bench
 row (default: all rows in ``bench.BENCH_QUERIES``).
 
-The indexed probe rows need their materialized indexes to exist, so the
-same untimed warm-up bench.main() performs runs first when any of those
-rows is requested.
+The indexed probe rows need their materialized indexes to exist, so
+bench's untimed ``warm_indexes`` runs first when any of those rows is
+requested.
 """
 
 from __future__ import annotations
@@ -22,15 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from remote_storage_adapter_spark.session import get_spark  # noqa: E402
-from remote_storage_adapter_spark.sources.tables import load_table  # noqa: E402
-
-import pyspark.sql.functions as F  # noqa: E402
-
-_NEEDS_INDEX = {
-    "simsearch_lsh_indexed", "simsearch_ivf_indexed",
-    "text_search_indexed", "dedup_simhash_indexed",
-    "dedup_cross_join_indexed",
-}
 
 
 def explain_formatted(df) -> str:
@@ -53,16 +44,8 @@ def main() -> None:
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    if any(n in _NEEDS_INDEX for n in names):
-        from remote_storage_adapter_spark import queries as Q
-        from remote_storage_adapter_spark.operators import dedup as D
-        Q.q_simsearch_lsh_indexed(spark, sf_dir).count()
-        Q.q_simsearch_ivf_indexed(spark, sf_dir).count()
-        Q.q_text_search_indexed(spark, sf_dir).count()
-        docs = load_table(spark, sf_dir, "documents")
-        D.simhash_write_index(
-            docs.filter(F.col("doc_id") % 10 != 0),
-            bench._simhash_bench_table(sf_dir), max_hamming=3, buckets=16)
+    if bench.NEEDS_INDEX.intersection(names):
+        bench.warm_indexes(spark, sf_dir)
         # cross_join_indexed builds its catalog tables on first call
         bench.bench_dedup_cross_join_indexed(spark, sf_dir)
 

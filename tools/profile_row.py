@@ -24,8 +24,6 @@ from remote_storage_adapter_spark.session import get_spark  # noqa: E402
 from remote_storage_adapter_spark.sources.tables import load_table  # noqa: E402
 from remote_storage_adapter_spark.operators import dedup as D  # noqa: E402
 
-import pyspark.sql.functions as F  # noqa: E402
-
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -44,18 +42,9 @@ def main() -> None:
     spark.range(64).repartition(32).mapInPandas(
         lambda it: (pdf for pdf in it), "id long").count()
 
-    needs_index = {"simsearch_lsh_indexed", "simsearch_ivf_indexed",
-                   "text_search_indexed", "dedup_simhash_indexed",
-                   "dedup_cross_join_indexed"}
-    if any(n in needs_index for n in names):
-        from remote_storage_adapter_spark import queries as Q
-        Q.q_simsearch_lsh_indexed(spark, sf_dir).count()
-        Q.q_simsearch_ivf_indexed(spark, sf_dir).count()
-        Q.q_text_search_indexed(spark, sf_dir).count()
-        docs = load_table(spark, sf_dir, "documents")
-        D.simhash_write_index(docs.filter(F.col("doc_id") % 10 != 0),
-                              bench._simhash_bench_table(sf_dir),
-                              max_hamming=3, buckets=16)
+    if bench.NEEDS_INDEX.intersection(names):
+        bench.warm_indexes(spark, sf_dir)
+        # cross_join_indexed builds its catalog tables on first call
         bench.bench_dedup_cross_join_indexed(spark, sf_dir)
         D.unpersist_pinned(blocking=True)
 
