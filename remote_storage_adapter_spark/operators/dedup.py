@@ -415,8 +415,9 @@ def minhash_signatures_oph(docs: DataFrame, *, num_hashes: int = 64,
     filtered-array allocation per position per doc (~4k interpreted
     ops/doc at k=64); the expansion is O(m) ``zip_with`` +
     ``array_repeat`` + one ``flatten``. Signatures are bit-identical
-    (equality-gated in tools/ab_oph_densify.py; measured ~1.3× on the
-    signature build at sf0.1).
+    to the rotation rule (locked by
+    ``test_oph_run_length_densification_matches_rotation_rule``);
+    measured ~1.3× on the signature build at sf0.1.
     """
     k = num_hashes
     exploded = shingle_hash_rows(
@@ -758,9 +759,8 @@ def minhash_lsh_join(left: DataFrame, right: DataFrame, *,
     )
 
 
-_MH_META_SCHEMA = ("parts int, sig_parts int, buckets int, "
-                   "num_hashes int, bands int, shingle_n int, "
-                   "mode string")
+_MH_META_SCHEMA = ("parts int, sig_parts int, num_hashes int, "
+                   "bands int, shingle_n int, mode string")
 
 #: Canonical kwarg routing for callers that fan one ``minhash_kwargs``
 #: dict out to builds, appends, and probes (streaming.dedup.
@@ -779,7 +779,7 @@ MH_INDEXED_ONLY_KWARGS = frozenset({
     "prune", "probe_push_limit", "id_push_limit"})
 #: build-time layout knobs — probes and appends read the layout from
 #: ``{prefix}_meta``, never from call-site kwargs:
-MH_LAYOUT_KWARGS = frozenset({"buckets", "parts", "sig_parts"})
+MH_LAYOUT_KWARGS = frozenset({"parts", "sig_parts"})
 
 #: Floor (banded-table bytes) above which an UNPRUNED capped probe
 #: counts bucket populations from the banded scan (k-semi-join +
@@ -790,6 +790,7 @@ MH_LAYOUT_KWARGS = frozenset({"buckets", "parts", "sig_parts"})
 #: for full scans), costing 3.5 s at 500k docs; the semi-join path is
 #: flat but pays ~0.3-0.4 s of broadcast-build fixed cost, losing at
 #: ≤50k docs (1.72 s vs 1.42 s). Break-even ≈ 100-150k docs ≈ 16 MiB.
+#: Both paths were measured on the partitioned layout.
 MH_SEMI_CAP_FLOOR_BYTES = 16 << 20
 
 #: Auto-prune floor for the partitioned MinHash probe, in banded-table
@@ -797,12 +798,14 @@ MH_SEMI_CAP_FLOOR_BYTES = 16 << 20
 #: r10/r11, tools/bench_probe_scale.py, fixed 500-doc batch): pruning
 #: costs ~5-6 bounded planning actions of fixed per-job overhead,
 #: which beats the full scans only once the corpus term dominates —
-#: legacy capped probe grows 1.65→13.23 s across 500k→5M docs while
-#: the pruned probe stays ~3.1-3.5 s flat, putting the break-even at
-#: ~1.1M docs ≈ 160 MiB of banded parquet (9.3 B/row × 16 bands,
-#: measured). The r10 floor of 64 MiB engaged pruning at the 500k
-#: cell (71 MiB) where it cost 1.9× legacy — the r10 verdict's
-#: mid-scale regression. Force with ``prune=True/False`` where the
+#: the full-scan capped probe grows 1.65→13.23 s across 500k→5M docs
+#: while the pruned probe stays ~3.1-3.5 s flat, putting the
+#: break-even at ~1.1M docs ≈ 160 MiB of banded parquet (9.3 B/row ×
+#: 16 bands, measured). The r10 floor of 64 MiB engaged pruning at
+#: the 500k cell (71 MiB) where it cost 1.9× the full scan — the r10
+#: verdict's mid-scale regression. The full-scan series was measured
+#: on the since-removed bucketed layout, the pruned one on the
+#: partitioned layout. Force with ``prune=True/False`` where the
 #: deployment knows better (e.g. remote storage with high scan cost).
 MH_AUTO_PRUNE_FLOOR_BYTES = 160 << 20
 
@@ -828,9 +831,7 @@ def _mh_ik(idc: Column, sig_parts: int) -> Column:
 
 def read_minhash_meta(spark, table_prefix: str) -> dict | None:
     """The index's recorded build parameters (``{prefix}_meta``, one
-    row), or None for a pre-r10 index with no meta table. ``parts``
-    is NULL for a legacy (bucketBy-only) layout built with
-    ``parts=None``."""
+    row), or None when no meta row exists."""
     t = f"{table_prefix}_meta"
     if not spark.catalog.tableExists(t):
         return None
@@ -838,16 +839,31 @@ def read_minhash_meta(spark, table_prefix: str) -> dict | None:
     return rows[0].asDict() if rows else None
 
 
+def _require_mh_meta(spark, table_prefix: str, what: str) -> dict:
+    """The recorded build parameters, or a refusal: without them the
+    pk/ik derivation and the banding parameters cannot be verified,
+    and a probe or append under wrong ones silently misses or
+    strands postings. An index with no meta row predates the
+    partitioned layout or is a rebuild that crashed before its meta
+    write; either way the fix is a rebuild."""
+    meta = read_minhash_meta(spark, table_prefix)
+    if meta is None or meta.get("parts") is None:
+        raise ValueError(
+            f"{what}: {table_prefix} has no {table_prefix}_meta row "
+            f"recording a partitioned layout, so its build parameters "
+            f"cannot be verified; rebuild it with minhash_index")
+    return meta
+
+
 def _write_mh_meta(spark, table_prefix: str, *, parts, sig_parts,
-                   buckets, num_hashes, bands, shingle_n, mode) -> None:
+                   num_hashes, bands, shingle_n, mode) -> None:
     # reset first: callers predating the meta table reset only
     # banded/sigs/counts/applied, leaving a stale meta WAREHOUSE DIR
     # that blocks saveAsTable over the (catalog-absent) name; the
     # row is one build-time write, so the extra drop costs nothing
     reset_managed_tables(spark, f"{table_prefix}_meta")
     spark.createDataFrame(
-        [(parts, sig_parts, buckets, num_hashes, bands, shingle_n,
-          mode)],
+        [(parts, sig_parts, num_hashes, bands, shingle_n, mode)],
         _MH_META_SCHEMA,
     ).write.mode("overwrite").saveAsTable(f"{table_prefix}_meta")
 
@@ -924,7 +940,7 @@ def write_minhash_index_tables(banded: DataFrame, sigs: DataFrame,
                                table_prefix: str, *,
                                num_hashes: int, bands: int,
                                shingle_n: int = 3, mode: str = "oph",
-                               buckets: int = 32, parts: int = 8,
+                               parts: int = 8,
                                sig_parts: int = 16) -> None:
     """Write the partitioned-layout (r10) index tables from
     pre-computed (id, band, bucket) and (id, sig) frames — the shared
@@ -936,11 +952,9 @@ def write_minhash_index_tables(banded: DataFrame, sigs: DataFrame,
     # parts/sig_parts and crashes mid-way must not leave a new-layout
     # banded table described by the old meta row — stale layout
     # params would make every probe prune REAL partitions silently.
-    # Reset-first turns every crash window into missing-table
-    # (probes fail loudly; the maintainer's bootstrap replay
-    # rebuilds) or tables-without-meta (probes/appends fall back to
-    # the conservative full-scan legacy treatment, or fail loudly on
-    # the layout mismatch) — never wrong-pruning.
+    # Reset-first turns every crash window into missing-table or
+    # tables-without-meta: probes and appends refuse both (the
+    # maintainer's bootstrap replay rebuilds) — never wrong-pruning.
     reset_managed_tables(spark, *[f"{table_prefix}_{t}"
                                   for t in ("banded", "sigs",
                                             "counts", "meta")])
@@ -963,18 +977,16 @@ def write_minhash_index_tables(banded: DataFrame, sigs: DataFrame,
      .saveAsTable(f"{table_prefix}_sigs"))
     _write_mh_counts(banded, f"{table_prefix}_counts")
     _write_mh_meta(spark, table_prefix, parts=parts,
-                   sig_parts=sig_parts, buckets=buckets,
-                   num_hashes=num_hashes, bands=bands,
-                   shingle_n=shingle_n, mode=mode)
+                   sig_parts=sig_parts, num_hashes=num_hashes,
+                   bands=bands, shingle_n=shingle_n, mode=mode)
 
 
 def minhash_index(docs: DataFrame, table_prefix: str, *,
                   num_hashes: int = 64, bands: int = 16,
                   shingle_n: int = 3, mode: str = "oph",
                   id_col: str = "doc_id", text_col: str = "text",
-                  buckets: int = 32,
                   sigs: DataFrame | None = None,
-                  parts: int | None = 8,
+                  parts: int = 8,
                   sig_parts: int = 16) -> None:
     """Materialize a reference corpus' MinHash-LSH index as catalog
     tables — :func:`minhash_lsh_join`'s 'the banded frame is the
@@ -982,31 +994,21 @@ def minhash_index(docs: DataFrame, table_prefix: str, *,
     corpus ONCE; every incoming batch then joins against pruned
     table scans, never re-signing or re-shuffling the reference side.
 
-    Layouts (``parts`` selects; both probe identically):
-
-    - ``parts=N`` (default, r10): ``{prefix}_banded`` is PARTITIONED
-      by ``pk = band·parts + pmod(xxhash64(bucket), parts)`` (the
-      SimHash index's ``ck`` pattern — ``simhash_write_index``) with
-      files sorted by bucket, and ``{prefix}_sigs`` partitioned by
-      ``ik = pmod(xxhash64(id), sig_parts)`` with files sorted by
-      id. :func:`minhash_lsh_join_indexed` then prunes both scans to
-      the batch's touched partitions (``PartitionFilters``) and
-      pushes literal bucket/id In-filters into parquet so row groups
-      and pages outside the probe's key set are skipped — the probe
-      reads O(touched keys), not O(corpus). The r9 layout's
-      bucketBy could not prune: a JOIN key prunes neither buckets
-      nor row groups, so every micro-batch scanned the whole
-      reference (the r9 verdict's one weak component).
-    - ``parts=None`` (legacy, r9): bucketBy(buckets) on the join
-      keys — exchange-free candidate joins for corpus-sized probes,
-      full reference scan per probe. Kept for existing indexes;
-      appends and probes detect the layout from ``{prefix}_meta``
-      (absent on pre-r10 indexes ⇒ legacy).
+    Layout: ``{prefix}_banded`` is PARTITIONED by ``pk = band·parts +
+    pmod(xxhash64(bucket), parts)`` (the SimHash index's ``ck``
+    pattern — ``simhash_write_index``) with files sorted by bucket,
+    and ``{prefix}_sigs`` is partitioned by ``ik = pmod(xxhash64(id),
+    sig_parts)`` with files sorted by id.
+    :func:`minhash_lsh_join_indexed` then prunes both scans to the
+    batch's touched partitions (``PartitionFilters``) and pushes
+    literal bucket/id In-filters into parquet so row groups and pages
+    outside the probe's key set are skipped — the probe reads
+    O(touched keys), not O(corpus).
 
     Tables written (``saveAsTable``, overwrite):
 
-    - ``{prefix}_banded``: (id, band, bucket[, pk]).
-    - ``{prefix}_sigs``: (id, sig[, ik]) — the signature join-back
+    - ``{prefix}_banded``: (id, band, bucket, pk).
+    - ``{prefix}_sigs``: (id, sig, ik) — the signature join-back
       for Jaccard estimation.
     - ``{prefix}_counts``: (band, bucket, _n, batch_id) bucket
       populations as MERGEABLE per-batch delta rows (batch_id −1 for
@@ -1014,7 +1016,7 @@ def minhash_index(docs: DataFrame, table_prefix: str, *,
       broadcasts the tiny over-cap list instead of re-counting the
       corpus per batch, and appends stay O(batch) instead of
       re-aggregating the whole banded table (r8).
-    - ``{prefix}_meta``: one row recording parts/sig_parts/buckets/
+    - ``{prefix}_meta``: one row recording parts/sig_parts/
       num_hashes/bands/shingle_n/mode; probes and appends validate
       their parameters against it (a mismatch silently bands into
       disjoint keys) and read the pk/ik derivation from it, so the
@@ -1028,63 +1030,25 @@ def minhash_index(docs: DataFrame, table_prefix: str, *,
                           what="minhash_index")
     banded = _band_frame(sigs, bands=bands,
                          rows_per_band=num_hashes // bands, mode=mode)
-    if parts is not None:
-        write_minhash_index_tables(
-            banded, sigs, table_prefix, num_hashes=num_hashes,
-            bands=bands, shingle_n=shingle_n, mode=mode,
-            buckets=buckets, parts=parts, sig_parts=sig_parts)
-        return
-    # legacy bucketed layout. Reset BEFORE writing (ADVICE r10),
-    # mirroring write_minhash_index_tables: a legacy rebuild over an
-    # existing r10 PARTITIONED index that crashes between the table
-    # overwrites must not leave bucketed tables described by the old
-    # partitioned meta row — probes would fail on the missing pk
-    # column (loud, but inconsistent with the reset-first rationale).
-    # Reset-first turns every crash window into missing-table or
-    # tables-without-meta, both of which probe conservatively.
-    reset_managed_tables(docs.sparkSession,
-                         *[f"{table_prefix}_{t}"
-                           for t in ("banded", "sigs", "counts",
-                                     "meta")])
-    # repartition ALIGNED to the bucket spec
-    # before every bucketed write (HashPartitioning and bucket-id use
-    # the same pmod(murmur3, n), so task i holds exactly bucket i):
-    # without it each of the W write tasks emits a file per bucket it
-    # touches — W×buckets ≈ 1000 ~4 KB files PER APPEND, and five
-    # micro-batches left a 10,242-file banded table whose every
-    # subsequent scan, append commit, and cap recount paid the
-    # listing (measured: the near-dup gate's dominant fixed cost).
-    # Aligned, each append lands exactly ``buckets`` files.
-    (banded.repartition(buckets, F.col("band"), F.col("bucket"))
-     .write.mode("overwrite").bucketBy(buckets, "band", "bucket")
-     .sortBy("band", "bucket").saveAsTable(f"{table_prefix}_banded"))
-    (sigs.repartition(buckets, F.col("id"))
-     .write.mode("overwrite").bucketBy(buckets, "id").sortBy("id")
-     .saveAsTable(f"{table_prefix}_sigs"))
-    (banded.groupBy("band", "bucket")
-     .agg(F.count(F.lit(1)).alias("_n"))
-     .withColumn("batch_id", F.lit(-1).cast("long"))
-     .coalesce(1)
-     .write.mode("overwrite").saveAsTable(f"{table_prefix}_counts"))
-    _write_mh_meta(docs.sparkSession, table_prefix, parts=None,
-                   sig_parts=sig_parts, buckets=buckets,
-                   num_hashes=num_hashes, bands=bands,
-                   shingle_n=shingle_n, mode=mode)
+    write_minhash_index_tables(
+        banded, sigs, table_prefix, num_hashes=num_hashes,
+        bands=bands, shingle_n=shingle_n, mode=mode, parts=parts,
+        sig_parts=sig_parts)
 
 
 def minhash_index_append(docs: DataFrame, table_prefix: str, *,
                          num_hashes: int = 64, bands: int = 16,
                          shingle_n: int = 3, mode: str = "oph",
                          id_col: str = "doc_id", text_col: str = "text",
-                         buckets: int = 32,
                          skip_tables: frozenset = frozenset(),
                          on_step=None,
                          counts_batch_key: int | None = None,
                          sigs: DataFrame | None = None) -> None:
     """Fold a new batch of reference docs into an existing
     :func:`minhash_index` without re-signing the corpus: sign ONLY
-    the batch, append its postings/signatures into the bucketed
-    tables (bucket spec must match the build), and append the BATCH's
+    the batch, append its postings/signatures into the partitioned
+    tables (the layout is read from ``{prefix}_meta``; an index
+    without one is refused), and append the BATCH's
     per-bucket count deltas to the counts table (consumers SUM per
     bucket). r8: the previous counts maintenance re-aggregated the
     whole banded table per batch — the one per-batch cost that grew
@@ -1108,12 +1072,7 @@ def minhash_index_append(docs: DataFrame, table_prefix: str, *,
     for builds, −2 for keyless appends) rides every delta row, and
     the append self-skips when rows with that key already exist —
     closing the append-then-crash-before-ledger window the way the
-    SimHash prebuild marker does.
-
-    Legacy compatibility: a counts table built before delta rows
-    (no ``batch_id`` column) cannot take column-extended appends —
-    for those the old full overwrite refresh runs instead (correct,
-    O(corpus)); rebuild the index to get the delta path."""
+    SimHash prebuild marker does."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     if counts_batch_key is not None and counts_batch_key < 0:
@@ -1123,41 +1082,36 @@ def minhash_index_append(docs: DataFrame, table_prefix: str, *,
             f"supplied collision would silently skip the counts delta")
     spark = docs.sparkSession
     # ADVICE r9 (medium): with a LIVE ledger, a missing index table
-    # means a compaction crashed between its drop and rename —
+    # means the index was dropped under its maintainer —
     # ``saveAsTable`` append would silently RECREATE it holding only
-    # this batch, dropping the whole corpus. Refuse; re-running
-    # minhash_index_compact adopts the finished rewrite. The
-    # existence checks are catalog-only (no job); the one ledger row
-    # probe runs only on the rare missing-table path. An empty/absent
-    # ledger is NOT guarded: that is the maintainer's bootstrap
-    # regime, where tables legitimately may not exist yet.
+    # this batch, dropping the whole corpus. Refuse. The existence
+    # checks are catalog-only (no job); the one ledger row probe runs
+    # only on the rare missing-table path. An empty/absent ledger is
+    # NOT guarded: that is the maintainer's bootstrap regime, where
+    # tables legitimately may not exist yet.
     missing = [t for t in ("banded", "sigs", "counts")
                if not spark.catalog.tableExists(f"{table_prefix}_{t}")]
     if missing and table_live(spark, f"{table_prefix}_applied"):
         raise RuntimeError(
             f"{table_prefix}: ledger is live but "
-            f"{[f'{table_prefix}_{t}' for t in missing]} missing — a "
-            f"compaction crashed between drop and rename; re-run "
-            f"minhash_index_compact to adopt the finished rewrite "
-            f"before appending (an append would recreate the table "
-            f"holding only this batch, silently dropping the corpus)")
+            f"{[f'{table_prefix}_{t}' for t in missing]} missing; "
+            f"rebuild the index before appending (an append would "
+            f"recreate the table holding only this batch, silently "
+            f"dropping the corpus)")
     dirty = [t for t in ("banded", "sigs")
              if spark.catalog.tableExists(
                  f"{table_prefix}_{t}__compact_ready")]
     if dirty:
         raise RuntimeError(
             f"{table_prefix}: compaction ready-markers stand for "
-            f"{dirty} — a partitioned-layout compaction crashed "
-            f"during its INSERT OVERWRITE, so the table may hold "
-            f"partial data; re-run minhash_index_compact (it redoes "
-            f"the overwrite from the completed tmp fold) before "
-            f"appending")
-    meta = read_minhash_meta(spark, table_prefix)
-    if meta is not None:
-        _validate_mh_meta(meta, num_hashes=num_hashes, bands=bands,
-                          shingle_n=shingle_n, mode=mode,
-                          what="minhash_index_append")
-    partitioned = meta is not None and meta["parts"] is not None
+            f"{dirty} — a compaction crashed during its INSERT "
+            f"OVERWRITE, so the table may hold partial data; re-run "
+            f"minhash_index_compact (it redoes the overwrite from the "
+            f"completed tmp fold) before appending")
+    meta = _require_mh_meta(spark, table_prefix, "minhash_index_append")
+    _validate_mh_meta(meta, num_hashes=num_hashes, bands=bands,
+                      shingle_n=shingle_n, mode=mode,
+                      what="minhash_index_append")
     sigs = _sigs_for_docs(docs, sigs, num_hashes=num_hashes,
                           shingle_n=shingle_n, mode=mode,
                           id_col=id_col, text_col=text_col,
@@ -1166,69 +1120,46 @@ def minhash_index_append(docs: DataFrame, table_prefix: str, *,
                          rows_per_band=num_hashes // bands,
                          mode=mode)
     if "banded" not in skip_tables:
-        if partitioned:
-            # partition-aligned: one file per touched pk dir per
-            # append (see write_minhash_index_tables)
-            (banded.withColumn("pk", _mh_pk(meta["parts"]))
-             .repartition(F.col("pk"))
-             .sortWithinPartitions("pk", "bucket")
-             .write.mode("append").partitionBy("pk")
-             .saveAsTable(f"{table_prefix}_banded"))
-        else:
-            # bucket-aligned repartition: exactly ``buckets`` files
-            # per append instead of tasks×buckets (see minhash_index
-            # — the unaligned form grew a 10k-file table in five
-            # batches)
-            (banded.repartition(buckets, F.col("band"), F.col("bucket"))
-             .write.mode("append")
-             .bucketBy(buckets, "band", "bucket")
-             .sortBy("band", "bucket")
-             .saveAsTable(f"{table_prefix}_banded"))
+        # partition-aligned: one file per touched pk dir per append
+        # (see write_minhash_index_tables)
+        (banded.withColumn("pk", _mh_pk(meta["parts"]))
+         .repartition(F.col("pk"))
+         .sortWithinPartitions("pk", "bucket")
+         .write.mode("append").partitionBy("pk")
+         .saveAsTable(f"{table_prefix}_banded"))
         if on_step is not None:
             on_step("banded")
     if "sigs" not in skip_tables:
-        if partitioned:
-            (sigs.withColumn("ik", _mh_ik(F.col("id"),
-                                          meta["sig_parts"]))
-             .repartition(F.col("ik")).sortWithinPartitions("ik", "id")
-             .write.mode("append").partitionBy("ik")
-             .saveAsTable(f"{table_prefix}_sigs"))
-        else:
-            (sigs.repartition(buckets, F.col("id"))
-             .write.mode("append").bucketBy(buckets, "id").sortBy("id")
-             .saveAsTable(f"{table_prefix}_sigs"))
+        (sigs.withColumn("ik", _mh_ik(F.col("id"), meta["sig_parts"]))
+         .repartition(F.col("ik")).sortWithinPartitions("ik", "id")
+         .write.mode("append").partitionBy("ik")
+         .saveAsTable(f"{table_prefix}_sigs"))
         if on_step is not None:
             on_step("sigs")
     if "counts" not in skip_tables:
         ctab = f"{table_prefix}_counts"
-        if "batch_id" not in spark.table(ctab).columns:
-            # legacy pre-delta table: the old full refresh (O(corpus),
-            # but exchange-free on the bucketed banded scan)
-            (_recount_banded(spark, table_prefix)
-             .write.mode("overwrite").saveAsTable(ctab))
-        else:
-            key = -2 if counts_batch_key is None else int(counts_batch_key)
-            already = (
-                counts_batch_key is not None
-                and spark.table(ctab)
-                .filter(F.col("batch_id") == key).limit(1).count() > 0
-            )
-            if not already:
-                (banded.groupBy("band", "bucket")
-                 .agg(F.count(F.lit(1)).alias("_n"))
-                 .withColumn("batch_id", F.lit(key).cast("long"))
-                 .coalesce(1)     # one tiny delta file per batch,
-                 # not one per (mostly empty) shuffle partition
-                 .write.mode("append").saveAsTable(ctab))
+        key = -2 if counts_batch_key is None else int(counts_batch_key)
+        already = (
+            counts_batch_key is not None
+            and spark.table(ctab)
+            .filter(F.col("batch_id") == key).limit(1).count() > 0
+        )
+        if not already:
+            (banded.groupBy("band", "bucket")
+             .agg(F.count(F.lit(1)).alias("_n"))
+             .withColumn("batch_id", F.lit(key).cast("long"))
+             .coalesce(1)     # one tiny delta file per batch,
+             # not one per (mostly empty) shuffle partition
+             .write.mode("append").saveAsTable(ctab))
         if on_step is not None:
             on_step("counts")
 
 
 def _recount_banded(spark, table_prefix: str) -> DataFrame:
     """(band, bucket, _n) full recount of the banded table — ground
-    truth for the counts table (exchange-free: banded is bucketed on
-    the group keys). Shared by the legacy counts refresh, the
-    compactor, and the crash-repair delta derivation."""
+    truth for the counts table. One exchange: banded is partitioned
+    by ``pk``, not by the group keys. Shared by the compactor and the
+    crash-repair delta derivation."""
     return (spark.table(f"{table_prefix}_banded")
             .groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("_n")))
@@ -1249,14 +1180,12 @@ def minhash_counts_compact(spark, table_prefix: str) -> None:
     count). Under the quiesced contract the banded table is ground
     truth, so the rewrite recounts it directly — a crash mid-rewrite
     is repaired by simply re-running the compactor (banded is
-    untouched). The recount is exchange-free (banded is bucketed on
-    the group keys)."""
+    untouched)."""
     _assert_minhash_quiesced(spark, table_prefix)
-    # repartition(1), NOT coalesce(1): the recount plan is exchange-
-    # free on the legacy bucketed layout, so a coalesce would
-    # propagate back through the whole pipeline and single-thread the
-    # full banded scan; the explicit exchange keeps the scan/agg
-    # parallel and one task writes the (distinct buckets)-row result.
+    # repartition(1), NOT coalesce(1): a coalesce would run the
+    # recount's final aggregate in one task; the explicit exchange
+    # keeps the scan/agg parallel and one task writes the (distinct
+    # buckets)-row result.
     # The result is SORTED by the group keys so a pruned probe's
     # pushed bucket In-filter can skip row groups/pages of the
     # compacted file (r10).
@@ -1287,38 +1216,24 @@ def _assert_minhash_quiesced(spark, table_prefix: str) -> None:
                     f"completion before compacting")
 
 
-def minhash_index_compact(spark, table_prefix: str, *,
-                          buckets: int | None = None) -> dict:
+def minhash_index_compact(spark, table_prefix: str) -> dict:
     """File-compact the banded and sigs tables and fold the counts
-    deltas: aligned appends land up to ``buckets`` files per batch
-    (r9), so after N batches each table holds ~N·buckets small files
-    and every probe's scan listing grows with batch COUNT, not data.
-    This rewrite folds each table back to one file per bucket and the
-    counts table to one −1 row set — run it during a quiet window,
-    like ``lm_table_compact``. ``buckets`` defaults to the bucket
-    count the CATALOG records for each table (a caller-supplied value
-    is validated against it — a mismatched rewrite would make every
-    later append fail far from the causal call).
+    deltas: each aligned append lands one file per touched partition
+    directory, so after N batches a directory holds up to N small
+    files and every probe's scan listing grows with batch COUNT, not
+    data. This rewrite folds each table back to one file per
+    partition directory and the counts table to one −1 row set — run
+    it during a quiet window, like ``lm_table_compact``. A missing
+    table, or an index with no ``{prefix}_meta`` row, is refused.
 
     Contract: the maintainer must be QUIESCED (single-writer protocol,
     no in-flight batch — same refusal as :func:`minhash_counts_compact`).
 
-    Crash windows, LEGACY (bucketed) layout: each table rewrites via
-    tmp + drop + rename; a crash before the drop leaves the original
-    untouched (re-run), a crash between drop and rename is repaired
-    at the next call by the adopt-tmp branch — and MUST be repaired
-    by re-running this compactor before the maintainer resumes: an
-    append against the missing banded/sigs table would recreate it
-    holding only that batch (``saveAsTable`` append creates absent
-    tables), silently dropping the corpus —
-    :func:`minhash_index_append` now refuses that mechanically
-    (ADVICE r9).
-
-    Crash windows, PARTITIONED (r10) layout: ``ALTER TABLE RENAME``
-    on a partitioned managed table breaks its catalog partition
-    locations (verified empirically — the renamed table scans empty),
-    so the protocol is tmp + ready-marker + INSERT OVERWRITE + drop:
-    (1) fold into ``{tbl}__compact_tmp``; (2) write the one-row
+    Crash windows: ``ALTER TABLE RENAME`` on a partitioned managed
+    table breaks its catalog partition locations (verified
+    empirically — the renamed table scans empty), so the protocol is
+    tmp + ready-marker + INSERT OVERWRITE + drop: (1) fold into
+    ``{tbl}__compact_tmp``; (2) write the one-row
     ``{tbl}__compact_ready`` marker — the commit point that the tmp
     rewrite is COMPLETE; (3) INSERT OVERWRITE the original from tmp
     (re-applying the aligned repartition + bucket sort, since the
@@ -1340,70 +1255,24 @@ def minhash_index_compact(spark, table_prefix: str, *,
     missing). Its growth is three one-row files per batch — bounded
     by batch count, not corpus.
     Returns the per-table post-compaction file counts."""
-    meta = read_minhash_meta(spark, table_prefix)
-    partitioned = meta is not None and meta["parts"] is not None
     tables = (
-        (f"{table_prefix}_banded", ("band", "bucket"), "pk",
-         ("pk", "bucket")),
-        (f"{table_prefix}_sigs", ("id",), "ik", ("ik", "id")),
+        (f"{table_prefix}_banded", "pk", ("pk", "bucket")),
+        (f"{table_prefix}_sigs", "ik", ("ik", "id")),
     )
-    adopted = set()
-    for tbl, _cols, _pcol, _sort in tables:
-        tmp = f"{tbl}__compact_tmp"
+    for tbl, _pcol, _sort in tables:
         if not spark.catalog.tableExists(tbl):
-            if not partitioned and spark.catalog.tableExists(tmp):
-                # crashed between drop and rename: adopt the finished
-                # rewrite; skip the (identical) re-rewrite below
-                spark.sql(f"ALTER TABLE {tmp} RENAME TO {tbl}")
-                adopted.add(tbl)
-                continue
             raise ValueError(f"minhash_index_compact: no table {tbl}")
+    _require_mh_meta(spark, table_prefix, "minhash_index_compact")
     _assert_minhash_quiesced(spark, table_prefix)
-    out = {}
-    for tbl, bucket_cols, pcol, v2_sort in tables:
-        if tbl in adopted:
-            out[tbl] = len(spark.table(tbl).inputFiles())
-            continue
-        if partitioned:
-            out[tbl] = _compact_partitioned_table(
-                spark, tbl, pcol, sort_cols=v2_sort)
-            continue
-        desc = {r["col_name"]: r["data_type"]
-                for r in spark.sql(f"DESCRIBE EXTENDED {tbl}").collect()}
-        n_buckets = int(desc["Num Buckets"])
-        if buckets is not None and buckets != n_buckets:
-            raise ValueError(
-                f"minhash_index_compact: {tbl} is bucketed by "
-                f"{n_buckets}, caller passed buckets={buckets} — a "
-                f"mismatched rewrite would break every later append")
-        tmp = f"{tbl}__compact_tmp"
-        if spark.catalog.tableExists(tmp):
-            spark.sql(f"DROP TABLE {tmp}")   # stale earlier attempt
-        # read the FILES, not the table: the bucketed scan advertises
-        # its partitioning, the aligned repartition is elided as
-        # satisfied, and the rewrite keeps one file per (input file,
-        # bucket) — the plain parquet read has unknown partitioning,
-        # so the exchange actually runs and each bucket lands in ONE
-        # task (measured: table-read rewrite kept 12/12 files, file
-        # read folds to the bucket count). Schema comes from the
-        # catalog so a legitimately EMPTY table (zero data files)
-        # compacts to an empty rewrite instead of failing inference.
-        loc = desc["Location"]
-        (spark.read.schema(spark.table(tbl).schema)
-         .parquet(loc.removeprefix("file:"))
-         .repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-         .write.bucketBy(n_buckets, *bucket_cols)
-         .sortBy(*bucket_cols).saveAsTable(tmp))
-        spark.sql(f"DROP TABLE {tbl}")
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {tbl}")
-        out[tbl] = len(spark.table(tbl).inputFiles())
+    out = {tbl: _compact_partitioned_table(spark, tbl, pcol, sort_cols)
+           for tbl, pcol, sort_cols in tables}
     minhash_counts_compact(spark, table_prefix)
     return out
 
 
 def _compact_partitioned_table(spark, tbl: str, pcol: str,
                                sort_cols: tuple) -> int:
-    """One r10-layout table's compaction step — the tmp + ready-marker
+    """One table's compaction step — the tmp + ready-marker
     + INSERT OVERWRITE protocol documented in
     :func:`minhash_index_compact`. Returns the post-fold file count."""
     tmp = f"{tbl}__compact_tmp"
@@ -1508,10 +1377,11 @@ def minhash_lsh_join_indexed(spark, table_prefix: str,
     dir-pruned + broadcast with JVM InSet filters — the measured
     fast shape for batch-sized probes. ``mode``/``bands``/
     ``num_hashes``/``shingle_n`` must match the index build
-    (validated against ``{prefix}_meta`` when present).
+    (validated against ``{prefix}_meta``; an index without one is
+    refused — rebuild it).
 
-    ``prune``: None (default) auto-enables pruning on a partitioned-
-    layout index whose banded table is ≥``MH_AUTO_PRUNE_FLOOR_BYTES``
+    ``prune``: None (default) auto-enables pruning when the index's
+    banded table is ≥``MH_AUTO_PRUNE_FLOOR_BYTES``
     (160 MiB — the measured break-even, see the constant's
     calibration note) or lives on a non-local filesystem — below
     that, the extra planning actions (a bounded collect of touched
@@ -1552,17 +1422,17 @@ def minhash_lsh_join_indexed(spark, table_prefix: str,
     (the gate pins and materializes before passing — that is the
     contract, not a hint): this function counts it, bands it, and
     joins it back, and an unpersisted frame re-runs the shingle+
-    minhash computation once per consumer — on an unpartitioned
-    index with a cap and no ``caps_stats`` the fallback count alone
-    re-signs the whole batch (ADVICE r12). Pass ``n_in`` to remove
-    the count's exposure entirely."""
+    minhash computation once per consumer — with a cap and no
+    ``caps_stats`` the batch count alone re-signs the whole batch
+    (ADVICE r12). Pass ``n_in`` to remove the count's exposure
+    entirely."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
-    meta = read_minhash_meta(spark, table_prefix)
-    if meta is not None:
-        _validate_mh_meta(meta, num_hashes=num_hashes, bands=bands,
-                          shingle_n=shingle_n, mode=mode,
-                          what="minhash_lsh_join_indexed")
+    meta = _require_mh_meta(spark, table_prefix,
+                            "minhash_lsh_join_indexed")
+    _validate_mh_meta(meta, num_hashes=num_hashes, bands=bands,
+                      shingle_n=shingle_n, mode=mode,
+                      what="minhash_lsh_join_indexed")
     # a standing compaction ready-marker means an INSERT OVERWRITE
     # crashed mid-rewrite and the table may hold PARTIAL data — a
     # probe would silently miss near-dups and the curate gate would
@@ -1577,7 +1447,6 @@ def minhash_lsh_join_indexed(spark, table_prefix: str,
             f"{dirty} — the table may hold partial data from a "
             f"crashed compaction; re-run minhash_index_compact "
             f"before probing")
-    partitioned = meta is not None and meta["parts"] is not None
     rb = spark.table(f"{table_prefix}_banded")
     rs = spark.table(f"{table_prefix}_sigs")
     if sigs is not None:
@@ -1590,7 +1459,7 @@ def minhash_lsh_join_indexed(spark, table_prefix: str,
     lb = _band_frame(ls, bands=bands,
                      rows_per_band=num_hashes // bands, mode=mode)
     sz = None
-    do_prune = partitioned and prune is not False
+    do_prune = prune is not False
     if do_prune and prune is None:
         sz = _mh_table_bytes(spark, f"{table_prefix}_banded")
         do_prune = sz is None or sz >= MH_AUTO_PRUNE_FLOOR_BYTES
@@ -1607,8 +1476,7 @@ def minhash_lsh_join_indexed(spark, table_prefix: str,
     # above it. Measured series on both constants' notes.
     broadcast_probe = False
     semi_cap = False
-    if partitioned and (do_prune or (max_bucket_size is not None
-                                     and caps_stats is None)):
+    if do_prune or (max_bucket_size is not None and caps_stats is None):
         if n_in is None:
             # cached (pinned) — a cheap statistics job; bounds the
             # batch-side broadcast of the candidate join and the
@@ -1741,7 +1609,7 @@ def minhash_lsh_join_indexed(spark, table_prefix: str,
                                   ["band", "bucket"], "left_anti")
         else:
             # counts rows are per-batch DELTAS (r8) — sum per bucket;
-            # a legacy single-row-per-bucket table sums to itself
+            # a compacted table (one −1 row per bucket) sums to itself
             rcounts = (spark.table(f"{table_prefix}_counts")
                        .groupBy("band", "bucket")
                        .agg(F.sum("_n").alias("_n")))

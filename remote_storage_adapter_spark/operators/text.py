@@ -1393,14 +1393,9 @@ def passage_dedup(docs: DataFrame, *, window: int = 10,
 
 
 def _read_stats(spark, path: str) -> DataFrame:
-    """Read ``<path>/_stats`` with schema merging ON: a mixed
-    directory (legacy pre-guard rows without the ``buckets`` column
-    plus post-guard rows carrying it) must surface the column — plain
-    schema inference picks one file's schema at random and can hide
-    the recorded modulus, turning the bucket-mismatch guard back into
-    the silent failure it exists to prevent (r7 ADVICE)."""
-    return spark.read.option("mergeSchema", "true") \
-        .parquet(f"{path}/_stats")
+    """Read ``<path>/_stats``: one (n_docs, total_dl, buckets) row per
+    build or append."""
+    return spark.read.parquet(f"{path}/_stats")
 
 
 def _probe_stats(spark, path: str, buckets: int) -> tuple[int, float]:
@@ -1410,16 +1405,20 @@ def _probe_stats(spark, path: str, buckets: int) -> tuple[int, float]:
     ``.agg().first()`` used to be two sequential driver jobs per
     probe; merged they cost one). Raise semantics are identical to
     :func:`_check_index_buckets` + the callers' empty-stats check:
-    legacy no-column index, modulus mismatch, and empty stats all
-    fail loudly before any posting is scanned."""
+    an index with no recorded modulus, modulus mismatch, and empty
+    stats all fail loudly before any posting is scanned."""
     sdf = _read_stats(spark, path)
     if "buckets" not in sdf.columns:
-        _raise_legacy_index(path, buckets)
+        _raise_unrecorded_modulus(path, buckets)
     st = sdf.agg(
         F.sum("n_docs").alias("n"),
         F.sum("total_dl").alias("tot"),
+        F.count(F.lit(1)).alias("rows"),
+        F.count("buckets").alias("recorded"),
         F.collect_set("buckets").alias("bks")).first()
-    seen = set(st["bks"])  # collect_set drops NULL declaration gaps
+    if st["recorded"] < st["rows"]:
+        _raise_unrecorded_modulus(path, buckets)
+    seen = set(st["bks"])
     if seen and seen != {buckets}:
         _raise_bucket_mismatch(path, buckets, seen)
     if not st["n"]:
@@ -1427,16 +1426,13 @@ def _probe_stats(spark, path: str, buckets: int) -> tuple[int, float]:
     return st["n"], st["tot"] / st["n"]
 
 
-def _raise_legacy_index(path: str, buckets: int) -> None:
+def _raise_unrecorded_modulus(path: str, buckets: int) -> None:
     raise ValueError(
-        f"text index at {path} predates term-bucket modulus "
-        f"recording (no 'buckets' column in _stats), so the "
-        f"caller's buckets={buckets} cannot be verified — a "
-        f"mismatch silently prunes probes to wrong tb partitions "
-        f"and strands appended postings. Declare the modulus the "
-        f"index was BUILT with (once) via "
-        f"declare_index_buckets(spark, path, <built_buckets>), "
-        f"then retry")
+        f"text index at {path} records no term-bucket modulus (no "
+        f"'buckets' column in _stats), so the caller's "
+        f"buckets={buckets} cannot be verified — a mismatch silently "
+        f"prunes probes to wrong tb partitions and strands appended "
+        f"postings. Rebuild the index with build_text_index")
 
 
 def _raise_bucket_mismatch(path: str, buckets: int, seen: set) -> None:
@@ -1454,56 +1450,21 @@ def _check_index_buckets(stats_df: DataFrame, buckets: int,
     ``tb`` filter prunes to partitions the postings aren't in and the
     probe just misses documents).
 
-    A legacy index (no ``buckets`` column in any stats row — built
+    An index with no ``buckets`` column in its stats (one built
     before the modulus was recorded) is a hard error, not a silent
     pass (r7 ADVICE): the caller's modulus CANNOT be verified, and an
     append at the wrong modulus lands postings in partitions probes
-    never read — silent document invisibility. Declare the build's
-    true modulus once with :func:`declare_index_buckets`, after which
-    this guard works normally (rows that predate the declaration read
-    as NULL under the merged schema and are skipped)."""
+    never read — silent document invisibility. Rebuild it. A stats
+    row with a NULL modulus is refused the same way."""
     if "buckets" not in stats_df.columns:
-        _raise_legacy_index(path, buckets)
+        _raise_unrecorded_modulus(path, buckets)
     seen = {r["b"] for r in
             stats_df.select(F.col("buckets").alias("b"))
-            .distinct().collect() if r["b"] is not None}
+            .distinct().collect()}
+    if None in seen:
+        _raise_unrecorded_modulus(path, buckets)
     if seen and seen != {buckets}:
         _raise_bucket_mismatch(path, buckets, seen)
-
-
-def declare_index_buckets(spark, path: str, buckets: int) -> None:
-    """One-time migration for a LEGACY :func:`build_text_index` whose
-    ``_stats`` rows predate modulus recording: append a zero-mass
-    stats row (n_docs=0, total_dl=0) carrying ``buckets``. Probes SUM
-    stats rows, so the zero row changes no score, while the recorded
-    modulus re-arms the mismatch guard — future appends/probes at a
-    different count fail loudly instead of silently losing documents.
-
-    ``buckets`` must be the count the index was actually BUILT with
-    (count the ``tb=*`` partition dirs if unsure — it is ≥ the
-    largest ``tb`` value present). Declaring a wrong modulus makes
-    correct callers fail and wrong callers pass; this cannot be
-    detected after the fact, which is why the declaration is manual.
-    Raises if the index already records a different modulus."""
-    sdf = _read_stats(spark, path)
-    if "buckets" in sdf.columns:
-        seen = {r["b"] for r in
-                sdf.select(F.col("buckets").alias("b"))
-                .distinct().collect() if r["b"] is not None}
-        if seen and seen != {buckets}:
-            raise ValueError(
-                f"text index at {path} already records term-bucket "
-                f"count(s) {sorted(seen)}; cannot declare {buckets}")
-        if seen == {buckets}:
-            return  # already declared — idempotent
-    (
-        spark.createDataFrame(
-            [(0, 0, buckets)],
-            "n_docs long, total_dl long, buckets int")
-        .withColumn("part", F.lit(0)).coalesce(1)
-        .write.mode("append").partitionBy("part")
-        .parquet(f"{path}/_stats")
-    )
 
 
 def append_text_index(docs: DataFrame, path: str, *, buckets: int = 64,
@@ -1618,9 +1579,11 @@ def _bm25_score_batch(tf_hits: DataFrame, qt: DataFrame, *,
 
     The window STAYS deliberately (r15, VERDICT r14 next #6 measured
     and closed): two alternatives were interleave-A/B'd with output
-    equality (tools/ab_batch_topk.py). (a) The `_topk_terms` aggregate
-    top-k (collect (−score,id) structs → array_sort → slice k) read
-    2.72 s vs the window's 2.15 s at sf0.1 — per-query match groups
+    equality (the window's output is locked by
+    ``test_bm25_search_batch_matches_single_and_indexed``). (a) The
+    `_topk_terms` aggregate top-k (collect (−score,id) structs →
+    array_sort → slice k) read 2.72 s vs the window's 2.15 s at
+    sf0.1 — per-query match groups
     here are corpus-matched-docs-sized, so the interpreted array_sort
     loses to the codegen'd window sort that wins for `_topk_terms`'
     small per-doc vocab groups. (b) A one-exchange variant

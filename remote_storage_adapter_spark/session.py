@@ -121,12 +121,16 @@ def get_spark(app_name: str = "remote-storage-adapter-spark",
 
     ``local[N]`` here stands in for a multi-executor cluster: everything
     downstream relies only on partitioning, never on single-JVM locality.
+    N, and the shuffle width, is the number of CPUs this process may
+    run on, so a default session runs one task thread per core;
+    ``SPARK_GRAFT_CPUS`` overrides it.
 
-    ``extra_conf`` lets measurement harnesses (tools/ab_codec_sf10.py)
-    override STARTUP confs (e.g. ``spark.io.compression.codec``, which
-    the shuffle block writers read from the frozen SparkConf) while
-    keeping every other knob identical to the production session —
-    the A/B then isolates exactly the overridden conf. A key of
+    ``extra_conf`` lets measurement harnesses (perfbench, bench.py's
+    event log) override STARTUP confs (e.g.
+    ``spark.io.compression.codec``, which the shuffle block writers
+    read from the frozen SparkConf) while keeping every other knob
+    identical to the production session — a comparison then isolates
+    exactly the overridden conf. A key of
     ``_RUNTIME_CONF`` raises ``ValueError``: the query results and the
     oracle contract depend on those (the session time zone, how
     parquet timestamps read).
@@ -138,7 +142,8 @@ def get_spark(app_name: str = "remote-storage-adapter-spark",
             f"extra_conf may not override the engine's runtime confs: "
             f"{clash}")
     uds = os.environ.get("SPARK_GRAFT_UDS", "1") != "0"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))

@@ -82,16 +82,8 @@ def apply_curate_batch(batch_df: DataFrame, batch_id: int, *,
     the seen-fingerprint state; ``index_buckets`` independently fixes
     the BM25 index's TERM-bucket count and must match every probe
     (``bm25_search_indexed`` defaults to 64 — a mismatched probe
-    silently prunes to wrong ``tb`` partitions).
-
-    MIGRATION (r7 → r8): before ``index_buckets`` existed, the BM25
-    index inherited ``buckets`` (default 16); it now defaults to 64.
-    A pipeline resuming over an index built by the old code MUST pass
-    ``index_buckets=<the old build's count>`` (16 unless overridden).
-    This is no longer a silent hazard: indexes record their modulus
-    in ``_stats`` and every append/probe verifies it, and a legacy
-    index with no recorded modulus HARD-FAILS until declared via
-    ``operators.text.declare_index_buckets`` (r7 ADVICE).
+    silently prunes to wrong ``tb`` partitions; the index records its
+    modulus in ``_stats`` and every append and probe verifies it).
 
     Steps (each independently markered/idempotent):
 
@@ -115,7 +107,7 @@ def apply_curate_batch(batch_df: DataFrame, batch_id: int, *,
     ``minhash_prefix`` arms the NEAR-DUP gate: docs that survive all
     earlier gates are MinHash-joined within the batch (smallest-id
     wins) and against the accumulated index of previously-KEPT docs
-    (``minhash_lsh_join_indexed`` — bucketed scans, prior-committed
+    (``minhash_lsh_join_indexed`` — pruned scans, prior-committed
     state only), and ≥ ``near_dup_threshold`` matches get status
     ``near_dup`` — the curated corpus stays fuzzy-duplicate-free by
     construction, under the same decide-once protocol (statuses
@@ -127,7 +119,7 @@ def apply_curate_batch(batch_df: DataFrame, batch_id: int, *,
     itself rejected by the gate still drops — similarity is not
     transitive, but this keeps decisions a pure function of the
     batch + committed state. ``minhash_kwargs`` (num_hashes, bands,
-    shingle_n, mode, buckets, parts, sig_parts) must stay constant
+    shingle_n, mode, parts, sig_parts) must stay constant
     across the index's lifetime (the index records them in
     ``{prefix}_meta`` and probes/appends validate). CAP-REGIME NOTE
     (r9): the cross-index probe sends the WHOLE candidate set, not

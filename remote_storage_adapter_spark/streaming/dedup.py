@@ -111,7 +111,7 @@ def apply_index_batch(batch_df: DataFrame, batch_id: int,
     build_kwargs = {k: v for k, v in index_kwargs.items()
                     if k not in MH_PROBE_ONLY_KWARGS}
     append_kwargs = {k: v for k, v in build_kwargs.items()
-                     if k not in ("parts", "sig_parts")}
+                     if k not in MH_LAYOUT_KWARGS}
     if sigs is not None:
         # exact-coverage filter once: the pair/indexed joins consume
         # sigs as-is, and a signed SUPERSET would band non-batch docs
@@ -206,8 +206,7 @@ def _repair_counts_delta(spark, table_prefix: str, batch_id: int) -> None:
     present), this is a no-op. Otherwise the missing contribution is
     derived as full-banded-recount MINUS counts-so-far — ground truth,
     immune to any nondeterminism of re-deriving the kept set against
-    the batch's own landed rows. A legacy counts table (no batch_id
-    column) gets the old self-healing full overwrite refresh.
+    the batch's own landed rows.
 
     Counts semantics under duplicate banded residue (r8 review): the
     protocol's one unclosable window — a table append that commits but
@@ -220,13 +219,13 @@ def _repair_counts_delta(spark, table_prefix: str, batch_id: int) -> None:
     cap candidate-join fan-out, and physical rows are exactly what the
     join fans out over — a duplicated bucket genuinely costs double,
     and a cap that trips early on it errs conservative (fewer
-    candidates, never more cost). ``minhash_counts_compact`` and the
-    legacy refresh recount the same physical ground truth, so repair,
-    compaction, and refresh agree; only the crash-free O(batch) delta
-    path can momentarily under-count a duplicated bucket (it counts
-    the frame it appends), and the next repair or compaction heals the
-    drift. The batch_id label on absorbed duplicate rows has no
-    consumer beyond the presence probe above."""
+    candidates, never more cost). ``minhash_counts_compact`` recounts
+    the same physical ground truth, so repair and compaction agree;
+    only the crash-free O(batch) delta path can momentarily
+    under-count a duplicated bucket (it counts the frame it appends),
+    and the next repair or compaction heals the drift. The batch_id
+    label on absorbed duplicate rows has no consumer beyond the
+    presence probe above."""
     from pyspark.sql import functions as F
 
     from remote_storage_adapter_spark.operators.dedup import (
@@ -234,10 +233,6 @@ def _repair_counts_delta(spark, table_prefix: str, batch_id: int) -> None:
     )
 
     ctab = f"{table_prefix}_counts"
-    if "batch_id" not in spark.table(ctab).columns:
-        (_recount_banded(spark, table_prefix)
-         .write.mode("overwrite").saveAsTable(ctab))
-        return
     if spark.table(ctab).filter(
             F.col("batch_id") == int(batch_id)).limit(1).count() > 0:
         return  # delta landed; only the ledger row was lost
@@ -294,8 +289,8 @@ def stream_minhash_index_maintain(
 ):
     """Maintain a MinHash index over a parquet landing directory of
     documents; returns the StreamingQuery. ``index_kwargs`` =
-    num_hashes/bands/shingle_n/mode/id_col/text_col/buckets, and must
-    stay constant across the index's lifetime. With
+    num_hashes/bands/shingle_n/mode/id_col/text_col/parts/sig_parts,
+    and must stay constant across the index's lifetime. With
     ``dedup_threshold`` set, each batch is fuzzy-deduplicated against
     the accumulated corpus (and within itself) BEFORE only the kept
     docs are indexed — streaming text dedup-on-ingest (see

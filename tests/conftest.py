@@ -57,7 +57,6 @@ SLOW_TESTS = {
     "test_lm_table_delta_maintainer_exactly_once_and_compacts",  # 24 s
     "test_webdataset_archive_local_equals_default",            # 24 s
     "test_streaming_hll_matches_batch",                        # 22 s
-    "test_minhash_index_compact_legacy_bucketed",              # 21 s
     "test_int8_quantization_error_bound",                      # 20 s
     "test_curate_gate_forwards_probe_kwargs",                  # 20 s
     "test_minhash_append_guards_compaction_crash_windows",     # 19 s

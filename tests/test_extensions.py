@@ -2512,59 +2512,46 @@ def test_minhash_precomputed_sigs_equality(spark):
                      for t in ("banded", "sigs", "counts", "applied")])
 
 
-def test_text_index_legacy_modulus_declaration(spark, tmp_path):
-    """r7 ADVICE (medium): an index whose _stats predate modulus
-    recording is UNVERIFIABLE — every entry point must hard-fail
-    instead of silently tolerating (a mismatched append strands
-    postings in partitions probes never read), and
-    declare_index_buckets re-arms the guard with a zero-mass stats
-    row that changes no score."""
+def test_text_index_without_modulus_is_refused(spark, tmp_path):
+    """r7 ADVICE (medium): an index whose _stats record no term-bucket
+    modulus is UNVERIFIABLE — every entry point must hard-fail and
+    name a rebuild instead of silently tolerating (a mismatched append
+    strands postings in partitions probes never read)."""
     import shutil
 
     from remote_storage_adapter_spark.operators.text import (
         append_text_index,
         bm25_search_indexed,
         build_text_index,
-        declare_index_buckets,
     )
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta doc{i}") for i in range(4)],
         "doc_id long, text string")
-    path = str(tmp_path / "legacy_idx")
+    path = str(tmp_path / "unrecorded_idx")
     build_text_index(docs, path, buckets=4)
-    base_hits = {r["doc_id"]: r["score"] for r in
-                 bm25_search_indexed(spark, path, "alpha", k=4,
-                                     buckets=4).collect()}
-    # simulate a pre-guard index: rewrite _stats without the column
-    legacy = [(r["n_docs"], r["total_dl"]) for r in
-              spark.read.parquet(f"{path}/_stats")
-              .select("n_docs", "total_dl").collect()]
-    shutil.rmtree(f"{path}/_stats")
-    (
-        spark.createDataFrame(legacy, "n_docs long, total_dl long")
-        .withColumn("part", F.lit(0)).coalesce(1)
-        .write.partitionBy("part").parquet(f"{path}/_stats")
-    )
-    # unverifiable → refuse, even at the TRUE count (can't know it)
-    with pytest.raises(ValueError, match="declare_index_buckets"):
-        bm25_search_indexed(spark, path, "alpha", buckets=4).count()
-    with pytest.raises(ValueError, match="declare_index_buckets"):
-        append_text_index(
-            spark.createDataFrame([(100, "alpha zeta")],
-                                  "doc_id long, text string"),
-            path, buckets=4)
-    # declare the build's true modulus: guard re-arms, scores intact
-    declare_index_buckets(spark, path, 4)
-    declare_index_buckets(spark, path, 4)  # idempotent
-    after = {r["doc_id"]: r["score"] for r in
-             bm25_search_indexed(spark, path, "alpha", k=4,
-                                 buckets=4).collect()}
-    assert after == base_hits  # the zero-mass row changed nothing
-    with pytest.raises(ValueError, match="term-bucket"):
-        bm25_search_indexed(spark, path, "alpha", buckets=8).count()
-    with pytest.raises(ValueError, match="already records"):
-        declare_index_buckets(spark, path, 8)
+    stats = [(r["n_docs"], r["total_dl"]) for r in
+             spark.read.parquet(f"{path}/_stats")
+             .select("n_docs", "total_dl").collect()]
+    # _stats without the modulus column, then with a NULL modulus
+    for schema, rows in (
+            ("n_docs long, total_dl long", stats),
+            ("n_docs long, total_dl long, buckets int",
+             [(n, tot, None) for n, tot in stats] + [(0, 0, 4)])):
+        shutil.rmtree(f"{path}/_stats")
+        (
+            spark.createDataFrame(rows, schema)
+            .withColumn("part", F.lit(0)).coalesce(1)
+            .write.partitionBy("part").parquet(f"{path}/_stats")
+        )
+        # unverifiable → refuse, even at the TRUE count (can't know it)
+        with pytest.raises(ValueError, match="Rebuild the index"):
+            bm25_search_indexed(spark, path, "alpha", buckets=4).count()
+        with pytest.raises(ValueError, match="Rebuild the index"):
+            append_text_index(
+                spark.createDataFrame([(100, "alpha zeta")],
+                                      "doc_id long, text string"),
+                path, buckets=4)
 
 
 def test_simhash_first_agree_emit_equals_legacy_dedup(spark):

@@ -707,66 +707,6 @@ def test_minhash_indexed_join_matches_direct_and_skips_shuffle(spark):
         spark.sql(f"DROP TABLE {prefix}_{t}")
 
 
-def test_minhash_legacy_layout_bucketed_join(spark):
-    """The legacy (parts=None) bucketed layout stays fully
-    supported: equality with the direct join, the bucketed banded
-    scan (SelectedBucketsCount — pre-distributed, no reference-side
-    Exchange), the exchange-free counts recount, and appends
-    detecting the layout from the meta row."""
-    from remote_storage_adapter_spark.operators import dedup as D
-
-    ref = spark.createDataFrame(
-        [(100 + i, f"common text body shared across docs w{i % 3}")
-         for i in range(12)], "doc_id long, text string")
-    inc = spark.createDataFrame(
-        [(i, f"common text body shared across docs v{i % 2}")
-         for i in range(8)], "doc_id long, text string")
-    prefix = "mh_idx_legacy_test"
-    D.reset_managed_tables(
-        spark, *[f"{prefix}_{t}"
-                 for t in ("banded", "sigs", "counts", "meta")])
-    with D.cache_scope():
-        D.minhash_index(ref, prefix, num_hashes=16, bands=4,
-                        shingle_n=3, buckets=4, parts=None)
-        assert D.read_minhash_meta(spark, prefix)["parts"] is None
-        direct = sorted(
-            (r.id_l, r.id_r, round(r.est_jaccard, 9))
-            for r in D.minhash_lsh_join(
-                inc, ref, num_hashes=16, bands=4,
-                threshold=0.1).collect())
-        indexed = sorted(
-            (r.id_l, r.id_r, round(r.est_jaccard, 9))
-            for r in D.minhash_lsh_join_indexed(
-                spark, prefix, inc, num_hashes=16, bands=4,
-                threshold=0.1).collect())
-        assert direct == indexed and direct
-        plan = _spark_plan(D.minhash_lsh_join_indexed(
-            spark, prefix, inc, num_hashes=16, bands=4, threshold=0.1))
-        assert "SelectedBucketsCount" in plan  # bucketed banded scan
-        more = spark.createDataFrame(
-            [(200 + i, f"common text body shared across docs v{i % 2}")
-             for i in range(4)], "doc_id long, text string")
-        D.minhash_index_append(more, prefix, num_hashes=16, bands=4,
-                               shingle_n=3, buckets=4)
-        grown = sorted(
-            (r.id_l, r.id_r, round(r.est_jaccard, 9))
-            for r in D.minhash_lsh_join_indexed(
-                spark, prefix, inc, num_hashes=16, bands=4,
-                threshold=0.1).collect())
-        direct_grown = sorted(
-            (r.id_l, r.id_r, round(r.est_jaccard, 9))
-            for r in D.minhash_lsh_join(
-                inc, ref.unionByName(more), num_hashes=16, bands=4,
-                threshold=0.1).collect())
-        assert grown == direct_grown and len(grown) > len(direct)
-        counts_plan = _spark_plan(
-            spark.table(f"{prefix}_banded").groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n")))
-        assert "Exchange" not in counts_plan  # bucketed agg, no shuffle
-    for t in ("banded", "sigs", "counts", "meta"):
-        spark.sql(f"DROP TABLE {prefix}_{t}")
-
-
 def test_semantic_dedup_assignment_is_map_side(spark):
     """SemDeDup scale shape: with driver-side centroids the cell
     assignment is a literal-folded map pass — ZERO Exchange — so the

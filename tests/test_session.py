@@ -1,8 +1,10 @@
-"""Session construction guards that need no session: the Unix domain
-socket path-length decision, and refusing ``extra_conf`` overrides of
-the engine's runtime confs."""
+"""Session construction: the Unix domain socket path-length decision
+and refusing ``extra_conf`` overrides of the engine's runtime confs
+(no session needed), and the width of the session the tests run on."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -72,3 +74,14 @@ def test_extra_conf_refuses_runtime_conf(key):
     # raised before any session is built
     with pytest.raises(ValueError, match=key):
         S.get_spark("refused", extra_conf={key: "x"})
+
+
+def test_session_width_is_the_cpu_affinity(spark):
+    """A default session runs one task thread per CPU this process may
+    run on, and as many shuffle partitions; ``SPARK_GRAFT_CPUS`` (and
+    ``SPARK_MASTER``, as perfbench sets both) still override it."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
+    sc = spark.sparkContext
+    assert sc.master == os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    assert sc.getConf().get("spark.sql.shuffle.partitions") == cpus

@@ -479,7 +479,7 @@ def test_streaming_minhash_index_matches_batch_and_skips_replay(
             spark, landing, prefix, str(tmp_path / ckpt),
             schema=schema, available_now=True,
             max_files_per_trigger=1, num_hashes=16, bands=4,
-            shingle_n=3, buckets=4)
+            shingle_n=3)
         q.awaitTermination(120)
 
     run("ck1")
@@ -679,7 +679,7 @@ def test_minhash_maintainer_recovers_between_table_appends(
         [(i, f"common text body shared across docs w{i % 2}")
          for i in range(6)], schema)
     assert SD.apply_index_batch(b0, 0, prefix, num_hashes=16, bands=4,
-                                shingle_n=3, buckets=4)
+                                shingle_n=3)
     # batch 1 dies after the banded append, before the sigs append
     b1 = spark.createDataFrame(
         [(100 + i, f"common text body shared across docs w{i % 2}")
@@ -700,16 +700,16 @@ def test_minhash_maintainer_recovers_between_table_appends(
     monkeypatch.setattr(SD, "minhash_index_append", dying_append)
     with pytest.raises(RuntimeError):
         SD.apply_index_batch(b1, 1, prefix, num_hashes=16, bands=4,
-                             shingle_n=3, buckets=4)
+                             shingle_n=3)
     monkeypatch.undo()
     banded_after_crash = spark.table(f"{prefix}_banded").count()
     assert SD.apply_index_batch(b1, 1, prefix, num_hashes=16, bands=4,
-                                shingle_n=3, buckets=4)
+                                shingle_n=3)
     # replay appended ONLY sigs: banded row count unchanged
     assert spark.table(f"{prefix}_banded").count() == banded_after_crash
     # and a third apply is a clean skip
     assert SD.apply_index_batch(b1, 1, prefix, num_hashes=16, bands=4,
-                                shingle_n=3, buckets=4) is False
+                                shingle_n=3) is False
     # end state equals a clean one-shot index over both batches
     inc = spark.createDataFrame(
         [(i, f"common text body shared across docs v{i % 2}")
@@ -769,7 +769,7 @@ def test_streaming_text_dedup_on_ingest(spark, tmp_path):
             spark, landing, prefix, str(tmp_path / ckpt),
             schema=schema, dedup_threshold=0.5, available_now=True,
             max_files_per_trigger=1, num_hashes=16, bands=8,
-            shingle_n=3, buckets=4)
+            shingle_n=3)
         q.awaitTermination(120)
 
     run("ck1")
@@ -1742,7 +1742,7 @@ def test_minhash_counts_delta_replay_no_double_count(spark, monkeypatch):
     D.reset_managed_tables(
         spark, *[f"{prefix}_{t}"
                  for t in ("banded", "sigs", "counts", "applied")])
-    mk = dict(num_hashes=16, bands=4, shingle_n=3, buckets=4)
+    mk = dict(num_hashes=16, bands=4, shingle_n=3)
     b0 = spark.createDataFrame(
         [(i, f"common text body shared across docs w{i % 2}")
          for i in range(6)], schema)
@@ -1812,7 +1812,7 @@ def test_minhash_counts_compact_safe_and_refuses_inflight(
     D.reset_managed_tables(
         spark, *[f"{prefix}_{t}"
                  for t in ("banded", "sigs", "counts", "applied")])
-    mk = dict(num_hashes=16, bands=4, shingle_n=3, buckets=4)
+    mk = dict(num_hashes=16, bands=4, shingle_n=3)
 
     def batch(n, start):
         return spark.createDataFrame(
@@ -1895,7 +1895,7 @@ def test_minhash_bootstrap_and_missing_delta_crash_repair(
     D.reset_managed_tables(
         spark, *[f"{prefix}_{t}"
                  for t in ("banded", "sigs", "counts", "applied")])
-    mk = dict(num_hashes=16, bands=4, shingle_n=3, buckets=4)
+    mk = dict(num_hashes=16, bands=4, shingle_n=3)
 
     def recount():
         return sorted(tuple(r) for r in spark.table(f"{prefix}_banded")
@@ -2213,37 +2213,11 @@ def test_minhash_index_compact_files_and_results(spark):
     D.reset_managed_tables(spark, *tables)
 
 
-def test_minhash_index_compact_legacy_bucketed(spark):
-    """The legacy bucketed layout's compactor path (tmp + drop +
-    rename): folds to ≤buckets files per table with identical probe
-    results, and validates a mismatched caller bucket count."""
-    import pytest as _pytest
-
-    from remote_storage_adapter_spark.operators import dedup as D
-
-    prefix = "mh_compact_legacy_test"
-    kw = dict(num_hashes=16, bands=4, shingle_n=3, buckets=4,
-              parts=None)
-    tables, probe = _mh_compact_fixture(spark, prefix, kw)
-    before = probe()
-    assert before
-    assert _wh_files(spark, tables[0]) > 4
-    with _pytest.raises(ValueError, match="bucketed by"):
-        D.minhash_index_compact(spark, prefix, buckets=8)
-    out = D.minhash_index_compact(spark, prefix, buckets=4)
-    assert set(out) == {tables[0], tables[1]}
-    assert _wh_files(spark, tables[0]) <= 4
-    assert _wh_files(spark, tables[1]) <= 4
-    assert probe() == before
-    D.reset_managed_tables(spark, *tables)
-
-
 def test_minhash_append_guards_compaction_crash_windows(spark):
     """ADVICE r9 (medium), made mechanical: with a LIVE ledger,
     minhash_index_append refuses (a) when an index table is missing
-    (legacy drop→rename crash window — an append would silently
-    recreate it holding only the batch) and (b) when a partitioned-
-    layout compaction ready-marker stands (INSERT OVERWRITE crash
+    (an append would silently recreate it holding only the batch) and
+    (b) when a compaction ready-marker stands (INSERT OVERWRITE crash
     window — the table may hold partial data); re-running the
     compactor heals (b) and appends then proceed."""
     import pytest as _pytest
@@ -2340,7 +2314,7 @@ def test_apply_index_batch_routes_probe_only_kwargs(spark):
         spark, *[f"{prefix}_{t}"
                  for t in ("banded", "sigs", "counts", "applied")])
     caps = {}
-    mk = dict(num_hashes=16, bands=8, shingle_n=3, buckets=4,
+    mk = dict(num_hashes=16, bands=8, shingle_n=3,
               dedup_threshold=0.3,
               # the full probe-only set, including the r11 prune
               # forcing knob and push limits
@@ -2423,46 +2397,58 @@ def test_curate_gate_forwards_probe_kwargs(spark, tmp_path):
                         11: "near_dup", 12: "kept"}
 
 
-def test_minhash_legacy_rebuild_resets_meta_first(spark, monkeypatch):
-    """ADVICE r10: a legacy (parts=None) rebuild over an existing r10
-    PARTITIONED index must reset the meta row BEFORE writing data
-    tables — a crash mid-rebuild must never leave bucketed tables
-    described by a stale partitioned meta row (probes would prune on
-    a pk column that no longer exists)."""
+def test_minhash_rebuild_crash_resets_meta_first(spark, monkeypatch):
+    """ADVICE r10: a rebuild that changes ``parts`` must reset the
+    meta row BEFORE writing data tables, so a crash mid-rebuild never
+    leaves new-layout tables described by the old meta row (probes
+    would prune on the wrong pk derivation). What such a crash leaves
+    is then refused, not probed: a crash in the banded write leaves no
+    tables, and a crash in the meta write leaves new-layout tables
+    with no recorded build parameters. Either way a probe and an
+    append raise and name a rebuild, where a full-scan fallback would
+    answer from parameters nobody can verify; compaction refuses too."""
     import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from remote_storage_adapter_spark.operators import dedup as D
 
-    schema = "doc_id long, text string"
-    prefix = "mh_legacy_reset_test"
-    D.reset_managed_tables(
-        spark, *[f"{prefix}_{t}"
-                 for t in ("banded", "sigs", "counts", "meta")])
+    prefix = "mh_rebuild_reset_test"
+    tables = [f"{prefix}_{t}" for t in ("banded", "sigs", "counts", "meta")]
+    D.reset_managed_tables(spark, *tables)
     docs = spark.createDataFrame(
         [(i, f"common text body shared across docs w{i % 2}")
-         for i in range(6)], schema)
-    # partitioned build first — meta records parts=8
-    D.minhash_index(docs, prefix, num_hashes=16, bands=4, buckets=4)
-    assert D.read_minhash_meta(spark, prefix)["parts"] is not None
-    # legacy rebuild that crashes during the FIRST data write
-    # (after signing/validation): the stale partitioned meta must
-    # already be gone
-    from pyspark.sql.readwriter import DataFrameWriter
-
+         for i in range(6)], "doc_id long, text string")
+    more = docs.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    mk = dict(num_hashes=16, bands=4)
     real_save = DataFrameWriter.saveAsTable
+    for crash_in in ("_banded", "_meta"):
+        with D.cache_scope():
+            D.minhash_index(docs, prefix, parts=8, **mk)
+        assert D.read_minhash_meta(spark, prefix)["parts"] == 8
 
-    def dying_save(self, name, *a, **kw):
-        if name.endswith("_banded"):
-            raise RuntimeError("injected crash during banded write")
-        return real_save(self, name, *a, **kw)
+        def dying_save(self, name, *a, **kw):
+            if name.endswith(crash_in):
+                raise RuntimeError(f"injected crash in {crash_in}")
+            return real_save(self, name, *a, **kw)
 
-    monkeypatch.setattr(DataFrameWriter, "saveAsTable", dying_save)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        D.minhash_index(docs, prefix, num_hashes=16, bands=4,
-                        buckets=4, parts=None)
-    monkeypatch.undo()
-    assert D.read_minhash_meta(spark, prefix) is None
-    # a clean legacy rebuild then lands a parts=None meta row
-    D.minhash_index(docs, prefix, num_hashes=16, bands=4, buckets=4,
-                    parts=None)
-    assert D.read_minhash_meta(spark, prefix)["parts"] is None
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", dying_save)
+        with pytest.raises(RuntimeError, match="injected crash"), \
+                D.cache_scope():
+            D.minhash_index(docs, prefix, parts=4, **mk)
+        monkeypatch.undo()
+        assert D.read_minhash_meta(spark, prefix) is None
+        with D.cache_scope():
+            with pytest.raises(ValueError, match="rebuild it"):
+                D.minhash_lsh_join_indexed(spark, prefix, more,
+                                           threshold=0.1, **mk)
+            with pytest.raises(ValueError, match="rebuild it"):
+                D.minhash_index_append(more, prefix, **mk)
+        with pytest.raises(ValueError, match="no table|rebuild it"):
+            D.minhash_index_compact(spark, prefix)
+    # a clean rebuild records the new layout and probes again
+    with D.cache_scope():
+        D.minhash_index(docs, prefix, parts=4, **mk)
+        assert D.read_minhash_meta(spark, prefix)["parts"] == 4
+        assert D.minhash_lsh_join_indexed(spark, prefix, more,
+                                          threshold=0.1, **mk).count()
+    D.reset_managed_tables(spark, *tables)

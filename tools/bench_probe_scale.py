@@ -1,11 +1,9 @@
 """MinHash index PROBE wall vs reference-corpus size.
 
-The r9 verdict graded `minhash_lsh_join_indexed` weak: the banded and
-sigs reference tables are bucketBy-only, so a probe batch scans the
-ENTIRE reference per micro-batch — O(corpus) in the hot path of the
-flagship curation gate. This tool measures that term directly, before
-and after the r10 partition-pruned layout: it probes the SAME fixed
-500-doc batch against reference indexes of four sizes and reports the
+A probe that scans the whole reference per micro-batch is O(corpus)
+in the hot path of the curation gate. This tool measures that term
+directly: it probes the SAME fixed 500-doc batch against
+partitioned-layout reference indexes of four sizes and reports the
 probe wall (signing split out via the ``sigs=`` threading contract,
 so the timed probe is pure candidate-join + cap-check + verify-join).
 
@@ -14,10 +12,10 @@ Cells
 - ``real-5k``: sf0.1 documents, index built the normal way
   (``minhash_index``) — realistic bucket skew anchor.
 - ``synth-50k`` / ``synth-500k`` / ``synth-5M``: fabricated
-  banded/sigs/counts tables (the probe never inspects how the index
-  was produced — `bench_counts_append.py`'s trick). Fabricated rows
-  use buckets in ``[0, n_docs)`` which cannot collide with the real
-  xxhash64 bucket space, so the candidate set is EXACTLY the 500
+  banded/sigs/counts tables written by ``write_minhash_index_tables``
+  (the probe never inspects how the index was produced). Fabricated
+  rows use buckets in ``[0, n_docs)`` which cannot collide with the
+  real xxhash64 bucket space, so the candidate set is EXACTLY the 500
   seeded real postings in every cell and the spread across cells
   isolates the corpus-scan term (banded scan + counts aggregation +
   sigs verify scan), not result-size effects.
@@ -27,7 +25,7 @@ reads the counts table — the curate-gate configuration) and caps OFF.
 
 Usage::
 
-    python tools/bench_probe_scale.py [--layout legacy|v2] [--cells 5k,50k,500k,5m]
+    python tools/bench_probe_scale.py [--cells 5k,50k,500k,5m]
 
 (~5-10 min full run; prints one dict per cell and a final RESULT line.)
 """
@@ -75,26 +73,14 @@ def _batch_docs(spark):
         "doc_id long, text string")
 
 
-def _index_kwargs(layout):
-    import inspect
-    kw = dict(num_hashes=NUM_HASHES, bands=BANDS)
-    # pre-r10 builds don't take `parts`; post-r10 the default layout
-    # is partitioned, so the legacy cell pins parts=None explicitly
-    if "parts" in inspect.signature(D.minhash_index).parameters:
-        kw["parts"] = 8 if layout == "v2" else None
-    elif layout == "v2":
-        raise SystemExit("v2 layout not implemented in this tree")
-    return kw
-
-
-def _build_real(spark, docs, prefix, layout):
+def _build_real(spark, docs, prefix):
     with D.cache_scope():
         t0 = time.monotonic()
-        D.minhash_index(docs, prefix, **_index_kwargs(layout))
+        D.minhash_index(docs, prefix, num_hashes=NUM_HASHES, bands=BANDS)
         return time.monotonic() - t0
 
 
-def _fabricate(spark, batch, prefix, n_docs, layout):
+def _fabricate(spark, batch, prefix, n_docs):
     """Fabricate an n_docs reference index + seed it with the probe
     batch's REAL postings (shifted ids) so candidates exist and are
     identical across cells."""
@@ -103,7 +89,8 @@ def _fabricate(spark, batch, prefix, n_docs, layout):
     seeded = batch.select(
         (F.col("doc_id") + 100_000_000).alias("doc_id"), "text")
     with D.cache_scope():
-        D.minhash_index(seeded, seed_prefix, **_index_kwargs(layout))
+        D.minhash_index(seeded, seed_prefix, num_hashes=NUM_HASHES,
+                        bands=BANDS)
     seed_banded = spark.table(f"{seed_prefix}_banded") \
         .select("id", "band", "bucket")
     seed_sigs = spark.table(f"{seed_prefix}_sigs").select("id", "sig")
@@ -123,20 +110,8 @@ def _fabricate(spark, batch, prefix, n_docs, layout):
     sigs = synth_sigs.unionByName(seed_sigs)
 
     t0 = time.monotonic()
-    if layout == "legacy":
-        (banded.repartition(32, F.col("band"), F.col("bucket"))
-         .write.mode("overwrite").bucketBy(32, "band", "bucket")
-         .sortBy("band", "bucket").saveAsTable(f"{prefix}_banded"))
-        (sigs.repartition(32, F.col("id"))
-         .write.mode("overwrite").bucketBy(32, "id").sortBy("id")
-         .saveAsTable(f"{prefix}_sigs"))
-        (banded.groupBy("band", "bucket")
-         .agg(F.count(F.lit(1)).alias("_n"))
-         .withColumn("batch_id", F.lit(-1).cast("long"))
-         .write.mode("overwrite").saveAsTable(f"{prefix}_counts"))
-    else:
-        D.write_minhash_index_tables(banded, sigs, prefix,
-                                     num_hashes=NUM_HASHES, bands=BANDS)
+    D.write_minhash_index_tables(banded, sigs, prefix,
+                                 num_hashes=NUM_HASHES, bands=BANDS)
     build_s = time.monotonic() - t0
     _clean(spark, seed_prefix)
     return build_s
@@ -204,8 +179,6 @@ def measure_cell(spark, tag, prefix, batch, results, *, n_docs):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--layout", default="legacy",
-                    choices=("legacy", "v2"))
     ap.add_argument("--cells", default="5k,50k,500k,5m")
     args = ap.parse_args()
     cells = set(args.cells.lower().split(","))
@@ -213,7 +186,7 @@ def main():
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     batch = _batch_docs(spark)
-    results = {"layout": args.layout}
+    results = {}
 
     if "5k" in cells:
         docs = (spark.read.parquet(
@@ -221,7 +194,7 @@ def main():
             .select("doc_id", "text"))
         prefix = "pbs_real5k"
         _clean(spark, prefix)
-        build_s = _build_real(spark, docs, prefix, args.layout)
+        build_s = _build_real(spark, docs, prefix)
         measure_cell(spark, "real-5k", prefix, batch, results,
                      n_docs=docs.count())
         results["real-5k"]["build_s"] = round(build_s, 2)
@@ -233,7 +206,7 @@ def main():
             continue
         prefix = f"pbs_{short}"
         _clean(spark, prefix)
-        build_s = _fabricate(spark, batch, prefix, n_docs, args.layout)
+        build_s = _fabricate(spark, batch, prefix, n_docs)
         measure_cell(spark, tag, prefix, batch, results, n_docs=n_docs)
         results[tag]["fabricate_s"] = round(build_s, 2)
         _clean(spark, prefix)

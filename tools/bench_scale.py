@@ -34,9 +34,8 @@ Usage::
 
 Prints one JSON line per (flow, sf_dir) with the median of 3 walls,
 then a RESULT line per flow with the sf-to-sf wall ratios. The
-curation ladder and the MinHash append series have their own tools
-(bench_curate.py, bench_counts_append.py) — run those per-sf for the
-composed-maintenance story.
+curation ladder has its own tool (bench_curate.py) — run it per-sf
+for the composed-maintenance story.
 """
 
 from __future__ import annotations
