@@ -137,10 +137,24 @@ def lww_dedup(df: DataFrame,
     return winner.select(*cols)
 
 
-def tier_for_age(tiers: Sequence[RollupTier], age_s: int) -> RollupTier:
-    """Pick the coarsest tier whose age threshold the row has passed."""
-    eligible = [t for t in tiers if age_s >= t.age_s]
-    return max(eligible, key=lambda t: t.age_s) if eligible else tiers[0]
+def _age_slices(tiers: Sequence[RollupTier], now_ms: int) -> list:
+    """[(tier, predicate)] youngest tier first: a tier takes the rows
+    whose age is in [tier.age_s, next tier's age_s), so a sample
+    exactly one tier boundary old stays in the younger tier. The one
+    routing rule :func:`run_tiers` and :func:`tiered_view` share."""
+    ordered = sorted(tiers, key=lambda t: t.age_s)
+    uppers = [t.age_s for t in ordered[1:]] + [None]
+
+    def cutoff(age_s):
+        return F.timestamp_millis(F.lit(now_ms - age_s * 1000))
+
+    out = []
+    for t, upper in zip(ordered, uppers):
+        pred = F.col("ts") < cutoff(t.age_s) if t.age_s > 0 else F.lit(True)
+        if upper is not None:
+            pred = pred & (F.col("ts") >= cutoff(upper))
+        out.append((t, pred))
+    return out
 
 
 def rollup(df: DataFrame, precision_s: int, *, now_ms: int,
@@ -193,23 +207,9 @@ def tiered_view(raw: DataFrame, tier_tables: dict, *, now_ms: int,
     and 300 s aggregates for a 90-day query: 30× fewer rows before the
     query's own downsample runs.
     """
-    ordered = sorted(tiers, key=lambda t: t.age_s)
-    parts = []
-    for i, t in enumerate(ordered):
-        upper = ordered[i + 1].age_s if i + 1 < len(ordered) else None
-        src = tier_tables.get(t.precision_s, raw)
-        part = src
-        if t.age_s > 0:
-            part = part.filter(
-                F.col("ts")
-                < F.timestamp_millis(F.lit(now_ms - t.age_s * 1000))
-            )
-        if upper is not None:
-            part = part.filter(
-                F.col("ts")
-                >= F.timestamp_millis(F.lit(now_ms - upper * 1000))
-            )
-        parts.append(part.select(*raw.columns))
+    parts = [tier_tables.get(t.precision_s, raw).filter(pred)
+             .select(*raw.columns)
+             for t, pred in _age_slices(tiers, now_ms)]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -221,19 +221,8 @@ def run_tiers(df: DataFrame, *, now_ms: int,
               agg: str = "avg") -> dict:
     """Run every tier; returns {precision_s: DataFrame}. Tier N covers
     rows whose age ∈ [tier.age_s, next_tier.age_s)."""
-    ordered = sorted(tiers, key=lambda t: t.age_s)
-    out = {}
-    for i, t in enumerate(ordered):
-        upper = ordered[i + 1].age_s if i + 1 < len(ordered) else None
-        part = df.filter(
-            F.col("ts") < F.timestamp_millis(F.lit(now_ms - t.age_s * 1000))
-        )
-        if upper is not None:
-            part = part.filter(
-                F.col("ts")
-                >= F.timestamp_millis(F.lit(now_ms - upper * 1000))
-            )
-        out[t.precision_s] = rollup(
-            part, t.precision_s, now_ms=now_ms, older_than_s=t.age_s, agg=agg
-        )
-    return out
+    return {
+        t.precision_s: rollup(df.filter(pred), t.precision_s, now_ms=now_ms,
+                              older_than_s=t.age_s, agg=agg)
+        for t, pred in _age_slices(tiers, now_ms)
+    }

@@ -5,7 +5,7 @@ shape) so quality filtering always scores against a current reference
 arrival.
 
 The count merge is a plain ``sum`` — NOT replay-idempotent — so the
-maintainer rides ``streaming.sketch._merge_into_once``: the
+maintainer rides ``streaming.sketch._merge_into``: the
 applied-batch ledger lives inside the state directory and commits
 atomically with the merged counts in one swap rename. A batch re-fed
 after a swap-then-crash-before-checkpoint-commit is skipped; state is
@@ -40,10 +40,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from remote_storage_adapter_spark.streaming.sketch import (
-    _merge_into,
-    _merge_into_once,
-)
+from remote_storage_adapter_spark.streaming.sketch import _merge_into
 from remote_storage_adapter_spark.streaming.source import file_stream
 
 
@@ -66,10 +63,7 @@ def merge_lm_state(batch_df, state_path: str, *,
             .agg(F.sum("c").cast("long").alias("c"))
         )
 
-    if batch_id is None:
-        _merge_into(state_path, new, merge)
-        return True
-    return _merge_into_once(state_path, batch_id, new, merge)
+    return _merge_into(state_path, new, merge, batch_id)
 
 
 def stream_lm_maintain(

@@ -106,7 +106,7 @@ def stream_text_index_maintain(
     ``text.bm25_search_indexed`` for the probe side. Compact bucket
     partitions periodically with ``plans.compact.compact_table(spark, path,
     partition_col="tb", sort_cols=("term", "id"))`` — the compactor
-    refuses partitions holding uncommitted batches.
+    refuses to run while a partition holds an uncommitted batch.
 
     Replay ledgers key on the MICRO-BATCH ID, which is stable only
     under deterministic re-batching: a fresh-checkpoint reprocess must

@@ -13,7 +13,7 @@ merged into the state table. HLL and Bloom merges are idempotent
 under at-least-once delivery; CMS ``sum`` is NOT replay-idempotent, so
 the maintainer passes the micro-batch id and the merge records applied
 ids in a ledger that lives INSIDE the state directory and swaps
-atomically WITH the data (``_merge_into_once``) — a batch re-fed after
+atomically WITH the data (``_merge_into``) — a batch re-fed after
 a swap-then-crash-before-checkpoint-commit is skipped, closing the
 double-count window the checkpoint-offset contract alone leaves.
 
@@ -42,12 +42,14 @@ from remote_storage_adapter_spark.operators.sketch import (
 from remote_storage_adapter_spark.streaming.source import file_stream
 
 
-def _merge_into(state_path: str, new, merge) -> None:
+def _merge_into(state_path: str, new, merge,
+                batch_id: int | None = None) -> bool:
     """Read current state (if any), combine via ``merge``, swap in the
-    result. State presence is an explicit filesystem check, NOT a
-    try/except around the read+merge — an analysis error from the
-    merge itself (schema drift, corrupt state) must fail loudly, never
-    silently reset the accumulated sketch to this batch (ADVICE r5).
+    result; returns True if this call merged the batch. State presence
+    is an explicit filesystem check, NOT a try/except around the
+    read+merge — an analysis error from the merge itself (schema
+    drift, corrupt state) must fail loudly, never silently reset the
+    accumulated sketch to this batch (ADVICE r5).
 
     The swap is staged: merged state is written to a sibling ``._tmp``
     directory (the plan still reads the live path, so no lineage cut
@@ -59,6 +61,20 @@ def _merge_into(state_path: str, new, merge) -> None:
     leaves the state at ``._old`` with no live path; the next merge
     restores it before reading (and the interrupted batch replays from
     the stream checkpoint — the standard foreachBatch contract).
+
+    ``batch_id`` gives EXACTLY-ONCE replay for non-idempotent merges
+    (CMS sums, LM counts): the applied-batch ledger lives INSIDE the
+    state directory (``_applied.txt``) and is rewritten into the
+    staged ``._tmp`` alongside the merged data, so the single atomic
+    swap rename commits data and ledger together — there is no window
+    where the merge is applied but unrecorded (the gap the
+    checkpoint-offset contract leaves: a crash after the swap but
+    before the stream's commit re-feeds the batch). A replayed batch
+    whose id the live ledger holds is skipped (returns False). Without
+    an id the merge always applies, and a ledger that a state
+    maintained with batch ids already carries is kept as it is — a
+    no-id merge must not clobber it, or later crash-replays
+    double-count (r6 review).
     """
     spark = new.sparkSession
     jvm = spark._jvm
@@ -72,6 +88,11 @@ def _merge_into(state_path: str, new, merge) -> None:
     # zero
     if not fs.exists(state) and fs.exists(old):
         fs.rename(old, state)
+    applied = _read_applied(fs, jvm, hpath(f"{state_path}/_applied.txt"))
+    if batch_id is not None:
+        if batch_id in applied:
+            return False
+        applied = applied | {batch_id}
     if fs.exists(state):
         cur = spark.read.parquet(state_path)
         merged = merge(cur)  # errors here propagate — no fallback
@@ -80,11 +101,6 @@ def _merge_into(state_path: str, new, merge) -> None:
     if fs.exists(tmp):  # leftover from an interrupted stage write
         fs.delete(tmp, True)
     merged.write.parquet(state_path + "._tmp")
-    # a state previously maintained with batch ids carries its
-    # exactly-once ledger INSIDE the directory — a no-id merge must
-    # not clobber it, or later crash-replays double-count (r6 review)
-    applied = _read_applied(fs, jvm,
-                            hpath(f"{state_path}/_applied.txt"))
     if applied:
         out = fs.create(hpath(f"{state_path}._tmp/_applied.txt"), True)
         out.write(bytearray(
@@ -96,6 +112,7 @@ def _merge_into(state_path: str, new, merge) -> None:
         fs.rename(state, old)
     fs.rename(tmp, state)
     fs.delete(old, True)
+    return True
 
 
 def _read_applied(fs, jvm, path) -> set:
@@ -115,52 +132,6 @@ def _read_applied(fs, jvm, path) -> set:
     return ids
 
 
-def _merge_into_once(state_path: str, batch_id: int, new, merge) -> bool:
-    """:func:`_merge_into` with EXACTLY-ONCE replay for non-idempotent
-    merges (CMS sums, LM counts): the applied-batch ledger lives
-    INSIDE the state directory (``_applied.txt``) and is rewritten
-    into the staged ``._tmp`` alongside the merged data, so the single
-    atomic swap rename commits data and ledger together — there is no
-    window where the merge is applied but unrecorded (the gap the
-    checkpoint-offset contract leaves: a crash after the swap but
-    before the stream's commit re-feeds the batch). A replayed batch
-    whose id the live ledger holds is skipped. Returns True if this
-    call merged the batch.
-    """
-    spark = new.sparkSession
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    state = hpath(state_path)
-    old = hpath(state_path + "._old")
-    tmp = hpath(state_path + "._tmp")
-    fs = state.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(state) and fs.exists(old):
-        fs.rename(old, state)  # interrupted swap: restore
-    applied = _read_applied(fs, jvm, hpath(f"{state_path}/_applied.txt"))
-    if batch_id in applied:
-        return False
-    if fs.exists(state):
-        cur = spark.read.parquet(state_path)
-        merged = merge(cur)  # errors here propagate — no fallback
-    else:
-        merged = new
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-    merged.write.parquet(state_path + "._tmp")
-    out = fs.create(hpath(f"{state_path}._tmp/_applied.txt"), True)
-    out.write(bytearray(
-        "".join(f"{i}\n" for i in sorted(applied | {batch_id})),
-        "utf-8"))
-    out.close()
-    if fs.exists(old):
-        fs.delete(old, True)
-    if fs.exists(state):
-        fs.rename(state, old)
-    fs.rename(tmp, state)
-    fs.delete(old, True)
-    return True
-
-
 def merge_hll_state(batch_df, state_path: str, key_col: str,
                     group_cols: Sequence[str] = (), *,
                     p: int = 12, batch_id: int | None = None) -> None:
@@ -174,10 +145,7 @@ def merge_hll_state(batch_df, state_path: str, key_col: str,
         .groupBy(*group_cols, "register")
         .agg(F.max("max_rho").alias("max_rho"))
     )
-    if batch_id is None:
-        _merge_into(state_path, new, merge)
-    else:
-        _merge_into_once(state_path, batch_id, new, merge)
+    _merge_into(state_path, new, merge, batch_id)
 
 
 def merge_cms_state(batch_df, state_path: str, key_col: str, *,
@@ -194,10 +162,7 @@ def merge_cms_state(batch_df, state_path: str, key_col: str, *,
         .groupBy("sketch_row", "cell")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    if batch_id is None:
-        _merge_into(state_path, new, merge)
-    else:
-        _merge_into_once(state_path, batch_id, new, merge)
+    _merge_into(state_path, new, merge, batch_id)
 
 
 def merge_bloom_state(batch_df, state_path: str, key_col: str, *,
@@ -210,10 +175,7 @@ def merge_bloom_state(batch_df, state_path: str, key_col: str, *,
     merge = lambda cur: (
         cur.unionByName(new).dropDuplicates(["bit"])
     )
-    if batch_id is None:
-        _merge_into(state_path, new, merge)
-    else:
-        _merge_into_once(state_path, batch_id, new, merge)
+    _merge_into(state_path, new, merge, batch_id)
 
 
 #: kind → (merge_fn, accepted kwargs) for stream_sketch_maintain

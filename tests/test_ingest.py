@@ -257,7 +257,7 @@ def test_exactly_once_ledger_survives_compaction(spark, tmp_path):
     I.write_metrics_exactly_once(m, path, 0)
     I.write_metrics_exactly_once(m, path, 1)
     assert _vals(spark, path) == sorted([1.23, 5.1234] * 2)
-    compact_table(spark, path, target_files=1)
+    compact_table(spark, path)
     assert all(n == 1 for n in partition_file_counts(path).values())
     # replay both batches post-compaction: ledger says committed
     assert I.write_metrics_exactly_once(m, path, 0) is False
@@ -294,9 +294,9 @@ def test_compaction_refuses_uncommitted_batch(spark, tmp_path,
     monkeypatch.setattr(I, "_publish_file", real_publish)
     # batch 1 is partially published and uncommitted: refuse
     with pytest.raises(RuntimeError, match="uncommitted"):
-        compact_table(spark, path, target_files=1)
+        compact_table(spark, path)
     # replay to completion, then compaction proceeds and rows are exact
     assert I.write_metrics_exactly_once(m, path, 1) is True
-    out = compact_table(spark, path, target_files=1)
+    out = compact_table(spark, path)
     assert out
     assert _vals(spark, path) == sorted([1.23, 5.1234] * 2)

@@ -11,7 +11,6 @@ from remote_storage_adapter_spark.plans.rollup import (
     lww_dedup,
     rollup,
     run_tiers,
-    tier_for_age,
 )
 
 DAY_MS = 86_400_000
@@ -92,10 +91,18 @@ def test_rollup_applies_lww_before_avg(spark):
     assert out[0]["val"] == 6.0  # avg(5, 7), not avg(1, 5, 7)
 
 
-def test_tier_selection():
-    assert tier_for_age(DEFAULT_TIERS, 0).precision_s == 10
-    assert tier_for_age(DEFAULT_TIERS, 86_400).precision_s == 30
-    assert tier_for_age(DEFAULT_TIERS, 500_000).precision_s == 300
+def test_tier_selection(spark):
+    """A sample exactly one tier boundary old stays in the younger
+    tier: 86,400 s → 10 s, 86,401 s → 30 s."""
+    now = DAY_MS * 10
+    m = _metrics(spark, [
+        ("m", now - 86_400_000, 1.0, 0),
+        ("m", now - 86_401_000, 2.0, 0),
+    ])
+    tiers = run_tiers(m, now_ms=now, tiers=DEFAULT_TIERS)
+    assert [r["val"] for r in tiers[10].collect()] == [1.0]
+    assert [r["val"] for r in tiers[30].collect()] == [2.0]
+    assert tiers[300].count() == 0
 
 
 def test_run_tiers_partitions_by_age(spark):
@@ -117,7 +124,12 @@ def test_custom_tier_config(spark):
     out = rollup(m, 60, now_ms=DAY_MS, older_than_s=0, agg="max")
     assert [r["val"] for r in out.collect()] == [3.0]
     custom = (RollupTier(0, 5), RollupTier(3600, 60))
-    assert tier_for_age(custom, 7200).precision_s == 60
+    c = _metrics(spark, [("m", DAY_MS - 3_600_000, 1.0, 0),
+                         ("m", DAY_MS - 7_200_000, 3.0, 0)])
+    tiers = run_tiers(c, now_ms=DAY_MS, tiers=custom)
+    assert sorted(tiers) == [5, 60]
+    assert [r["val"] for r in tiers[5].collect()] == [1.0]
+    assert [r["val"] for r in tiers[60].collect()] == [3.0]
 
 
 def test_tiered_view_routes_age_slices(spark):

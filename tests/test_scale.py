@@ -182,13 +182,13 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     before = partition_file_counts(path)
     assert all(n >= 3 for n in before.values())
     n_rows = spark.read.parquet(path).count()
-    results = compact_table(spark, path, target_files=1)
+    results = compact_table(spark, path)
     after = partition_file_counts(path)
     assert all(n == 1 for n in after.values())
     assert results  # every partition was eligible
     assert spark.read.parquet(path).count() == n_rows
     # idempotent: second run is a no-op (below min_files)
-    assert compact_table(spark, path, target_files=1) == {}
+    assert compact_table(spark, path) == {}
 
 
 def test_lww_dedup_plan_is_pure_hash_aggregate(spark):

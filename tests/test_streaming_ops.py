@@ -1018,10 +1018,7 @@ def test_text_index_compaction_parity(spark, tmp_path):
     from remote_storage_adapter_spark.operators.text import (
         bm25_search_indexed,
     )
-    from remote_storage_adapter_spark.plans.compact import (
-        compact_partition,
-        compact_table,
-    )
+    from remote_storage_adapter_spark.plans.compact import compact_table
     from remote_storage_adapter_spark.streaming.retrieval import (
         apply_text_index_batch,
     )
@@ -1076,8 +1073,8 @@ def test_text_index_compaction_parity(spark, tmp_path):
     with open(fake, "wb") as fh:
         fh.write(b"not really parquet")
     with pytest.raises(RuntimeError, match="uncommitted"):
-        compact_partition(spark, idx, tb_dir.split("=", 1)[1],
-                          partition_col="tb", sort_cols=("term", "id"))
+        compact_table(spark, idx, partition_col="tb",
+                      sort_cols=("term", "id"))
     _os.remove(fake)
 
 
